@@ -242,7 +242,23 @@ def _split_stream_source(spark, sf_dir: str, src: str, n: int = 3,
     if modulus:
         docs = docs.filter(F.col("doc_id") % modulus == 0)
     lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
+    if lo is None:
+        raise ValueError(
+            f"no documents to split in {sf_dir} (modulus={modulus})"
+        )
     step = (hi - lo + n) // n
+    filled = {
+        r[0]
+        for r in docs.select(((F.col("doc_id") - lo) / step).cast("long"))
+        .distinct()
+        .collect()
+    }
+    empty = [i for i in range(n) if i not in filled]
+    if empty:
+        raise ValueError(
+            f"stream split of {sf_dir} (modulus={modulus}) leaves parts "
+            f"{empty} of {n} empty: doc_id range [{lo}, {hi}] is too sparse"
+        )
     for i in range(n):
         part = docs.filter(
             (F.col("doc_id") >= lo + i * step)

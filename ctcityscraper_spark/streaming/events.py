@@ -12,6 +12,28 @@ These wrappers expose:
   with watermark-bounded state
 - ``write_scd2_stream``: foreachBatch sink stamping scraped_at/row_hash and
   appending via ParquetStore — the streaming twin of engine.run_load
+
+Delta-zone recipe. ``write_scd2_stream`` and every ``streaming_*`` sink
+family below keep their stored state as delta zones (one ``batch_id=N``
+partition per micro-batch, plus compacted epochs) and run through ONE
+private runner, ``_zone_stream``. Per micro-batch, in order, it guarantees:
+
+- empty-batch skip: an empty batch returns before touching any zone;
+- meta stamp/validate: the zone's ``_zone_meta.json`` is written on the
+  first batch and checked on every later one (:func:`ensure_zone_meta`),
+  so a stream resumed under changed parameters dies before it writes;
+- compaction schedule: at every ``compact_every`` boundary
+  (``batch_id > 0``) each listed state zone folds the batches strictly
+  before this one into one epoch (:func:`compact_incremental_zone`, which
+  also finishes a crashed compaction's cleanup on replay);
+- per-batch artifact release: the family's body runs inside one
+  ``operators.artifacts.scope()``, and every cached frame or checkpoint the
+  batch created is freed when it ends, so a long-lived driver accumulates
+  no per-batch blocks;
+- exactly-once through ``batch_id=N`` overwrite: the streaming checkpoint
+  skips completed batches, every write overwrites this batch's own
+  partition (a replayed batch rewrites, never appends), and every zone read
+  is strictly-before, so a replay never sees its own half-written deltas.
 """
 
 from __future__ import annotations
@@ -125,10 +147,56 @@ def write_scd2_stream(
     StreamingQuery handle; caller stops it.
     """
 
+    def body(spark: SparkSession, batch_df: DataFrame, batch_id: int) -> None:
+        store.write_batch(
+            table, batch_df, dedup_against_existing=dedup_against_existing
+        )
+
+    return _zone_stream(stream, checkpoint_dir, body)
+
+
+def _zone_stream(
+    stream: DataFrame,
+    checkpoint_dir: str,
+    body,
+    *,
+    meta: tuple | None = None,
+    compact_every: int | None = None,
+    compactions=(),
+):
+    """Start ``body(spark, batch_df, batch_id)`` as an availableNow
+    ``foreachBatch`` sink under the module's delta-zone recipe.
+
+    ``meta`` is :func:`ensure_zone_meta`'s positional tail ``(base,
+    expected, rebuild_hint[, data_dirs])``; ``compactions`` lists
+    ``(zone_dir, compact_incremental_zone kwargs)`` pairs compacted at
+    every ``compact_every`` boundary before the body runs. Persistent
+    RDDs that appear during the body (untracked checkpoints such as the
+    components fixpoint's) are freed after it, on the single-driver-thread
+    assumption of :func:`graph.persistent_rdd_ids`: materialize
+    caller-owned caches before the stream starts. Returns the
+    StreamingQuery handle."""
+    from ctcityscraper_spark.operators import artifacts
+    from ctcityscraper_spark.operators.graph import (
+        persistent_rdd_ids,
+        unpersist_rdd_ids,
+    )
+
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        store.write_batch(table, batch_df, dedup_against_existing=dedup_against_existing)
+        spark = batch_df.sparkSession
+        if meta is not None:
+            ensure_zone_meta(spark, *meta)
+        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
+            for zone_dir, kw in compactions:
+                compact_incremental_zone(spark, zone_dir, batch_id, **kw)
+        rdd_ids = persistent_rdd_ids(spark)
+        try:
+            with artifacts.scope():
+                body(spark, batch_df, batch_id)
+        finally:
+            unpersist_rdd_ids(spark, persistent_rdd_ids(spark) - rdd_ids)
 
     return (
         stream.writeStream.foreachBatch(sink)
@@ -136,6 +204,25 @@ def write_scd2_stream(
         .trigger(availableNow=True)
         .start()
     )
+
+
+def _put(
+    df: DataFrame, base: str, batch_id: int,
+    partition_by: list[str] | None = None,
+) -> None:
+    """Write one batch's delta as the idempotent ``base/batch_id=N``
+    overwrite."""
+    writer = df.write.partitionBy(*partition_by) if partition_by else df.write
+    writer.mode("overwrite").parquet(f"{base}/batch_id={batch_id}")
+
+
+def _table_prefix(given: str | None, kind: str, base: str) -> str:
+    """Catalog-table prefix for a zone's compacted epochs: ``given``, else
+    ``<kind>_`` plus 8 hex chars of md5(``base``) — stable per zone
+    directory, so a restarted stream finds its own epoch tables."""
+    import hashlib
+
+    return given or f"{kind}_" + hashlib.md5(base.encode()).hexdigest()[:8]
 
 
 def _hadoop_fs(spark: SparkSession, base: str):
@@ -310,19 +397,45 @@ def check_zone_meta(
     """Read-side validation: like :func:`ensure_zone_meta` but never
     writes — an empty/absent zone passes (the reader returns None anyway),
     a data-bearing zone must carry a matching marker."""
-    existing = read_zone_meta(spark, base)
-    if existing is None:
-        if _zone_has_data(spark, base):
+    _checked_zone_meta(spark, base, rebuild_hint, expected=expected)
+
+
+def _checked_zone_meta(
+    spark: SparkSession,
+    base: str,
+    rebuild_hint: str,
+    *,
+    expected: dict | None = None,
+    kind: str | None = None,
+    data_dirs: list[str] | None = None,
+) -> dict | None:
+    """The one read-side marker check: the zone's marker, or None for an
+    absent/empty zone. A zone with data (probed under ``data_dirs`` for
+    composite zones) but no marker raises, as does a marker that differs
+    from ``expected`` or is not ``kind`` format_version 1 — rows written
+    under another contract are never returned."""
+    meta = read_zone_meta(spark, base)
+    if meta is None:
+        if any(_zone_has_data(spark, d) for d in data_dirs or [base]):
             raise ValueError(
                 f"stored zone {base} has data but no {ZONE_META_FILE} — "
                 f"unversioned stored state. {rebuild_hint}"
             )
-        return
-    if existing != expected:
+        return None
+    if expected is not None and meta != expected:
         raise ValueError(
-            f"stored zone {base} was written under {existing} but this "
+            f"stored zone {base} was written under {meta} but this "
             f"reader expects {expected}. {rebuild_hint}"
         )
+    if kind is not None and (
+        meta.get("kind") != kind or meta.get("format_version") != 1
+    ):
+        raise ValueError(
+            f"stored zone {base} was written under {meta.get('kind')!r} "
+            f"format_version={meta.get('format_version')!r}; this reader "
+            f"expects {kind} v1. {rebuild_hint}"
+        )
+    return meta
 
 
 def _resolve_zone_params(
@@ -463,24 +576,33 @@ def compact_incremental_zone(
     rows (a merge re-applied to merged rows is a no-op) because a later
     epoch reads an earlier one as input.
 
+    Replay guard: when a committed epoch NEWER than ``upto`` exists (a
+    replayed boundary batch whose batches a later compaction already
+    absorbed) nothing is touched and False is returned; an epoch for
+    exactly ``upto`` (replay after a crash between commit and cleanup)
+    skips the rewrite and still finishes the pending stale-dir cleanup.
+
     Driver-lifetime note (why epochs are NOT operators.artifacts-
     registered): an epoch is _SUCCESS-gated parquet on disk, not a cached
     frame — nothing here calls persist()/localCheckpoint(), so a
     long-lived streaming driver accumulates no cached blocks from
-    compaction (the per-batch ``batch_df.persist`` in the sinks is
-    unpersisted in ``finally``; tests assert zero storage blocks after a
-    full run). The only long-lived driver state is ONE catalog-table
-    entry per zone: each compaction drops the older epoch's table right
-    after deleting its files, so registrations don't accumulate either.
+    compaction (the sinks' per-batch persists are released by their
+    runner's ``artifacts.scope()``; tests assert zero storage blocks
+    after a full run). The only long-lived driver state is ONE
+    catalog-table entry per zone: each compaction drops the older epoch's
+    table right after deleting its files, so registrations don't
+    accumulate either.
     """
     from ctcityscraper_spark.sources.bucketed import write_bucketed
 
+    epochs = _compacted_epochs(spark, base)
+    if epochs and epochs[-1][0] > upto:
+        return False
     # a committed epoch for this exact upto means the rewrite already
     # happened (replay after a crash between commit and cleanup) — reading
     # it back to overwrite itself is both pointless and rejected by Spark
     # (UNSUPPORTED_OVERWRITE); only the cleanup below can still be pending
-    already = any(m == upto for m, _ in _compacted_epochs(spark, base))
-    if not already:
+    if not any(m == upto for m, _ in epochs):
         full = read_incremental_zone(spark, base, upto, table_prefix)
         if full is None:
             return False
@@ -505,7 +627,7 @@ def compact_incremental_zone(
     fs, path_cls = _hadoop_fs(spark, base)
     for _, p in _list_batch_dirs(spark, base, upto):
         fs.delete(path_cls(p), True)
-    for m, p in _compacted_epochs(spark, base):
+    for m, p in epochs:
         if m < upto:
             fs.delete(path_cls(p), True)
             if table_prefix:
@@ -563,10 +685,9 @@ def streaming_incremental_spans(
     contract and replay idempotence are preserved.
     Returns the StreamingQuery handle; caller stops it.
     """
-    import hashlib
-
     from pyspark.sql import functions as SF
 
+    from ctcityscraper_spark.operators.artifacts import persist_tracked
     from ctcityscraper_spark.operators.corpus import (
         SPAN_DOC_CAP,
         SPAN_WINDOW_CHARS,
@@ -577,76 +698,53 @@ def streaming_incremental_spans(
 
     w = width or SPAN_WINDOW_CHARS
     cap = doc_cap if doc_cap is not None else SPAN_DOC_CAP
-    idx_prefix = compact_table_prefix or (
-        "span_idx_" + hashlib.md5(index_dir.encode()).hexdigest()[:8]
-    )
+    idx_prefix = _table_prefix(compact_table_prefix, "span_idx", index_dir)
     out_cols = [
         "new_doc", "corpus_doc", "start_new", "start_corpus",
         "span_len", "n_windows",
     ]
 
-    def _put(df: DataFrame, base: str, batch_id: int) -> None:
-        df.write.mode("overwrite").parquet(f"{base}/batch_id={batch_id}")
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            epochs = _compacted_epochs(spark, index_dir)
-            # <=: on replay after a crash between epoch commit and delta
-            # cleanup, still call compact — it skips the rewrite and
-            # finishes the pending stale-dir cleanup
-            if not epochs or epochs[-1][0] <= batch_id:
-                compact_incremental_zone(
-                    spark, index_dir, batch_id, table_prefix=idx_prefix,
-                    bucket_keys=["win_h"], buckets=compact_buckets,
-                    sort=["win_h"],
-                )
-                compact_incremental_zone(spark, docs_dir, batch_id)
-        batch_df = batch_df.persist()
-        try:
-            spans = None
-            # only batches strictly BEFORE this one: a replayed batch must
-            # not join against its own half-written previous attempt
-            idx = read_incremental_zone(spark, index_dir, batch_id, idx_prefix)
-            if idx is not None:
-                spans = incremental_substring_spans(
-                    batch_df,
-                    corpus_docs=read_incremental_zone(spark, docs_dir, batch_id),
-                    corpus_windows=idx,
-                    width=w,
-                    doc_cap=cap,
-                    bucket_by_hash=True,
-                ).select(*out_cols)
-            if pair_within_batch:
-                within = duplicate_substring_spans(
-                    batch_df, width=w, doc_cap=cap, bucket_by_hash=True
-                ).select(
-                    SF.col("doc_b").alias("new_doc"),
-                    SF.col("doc_a").alias("corpus_doc"),
-                    SF.col("start_b").alias("start_new"),
-                    SF.col("start_a").alias("start_corpus"),
-                    "span_len",
-                    "n_windows",
-                )
-                spans = within if spans is None else spans.unionByName(within)
-            if spans is not None:
-                _put(spans, spans_dir, batch_id)
-            _put(batch_df.select("doc_id", "text"), docs_dir, batch_id)
-            _put(
-                substring_windows(batch_df, width=w, hashed=True),
-                index_dir,
-                batch_id,
+    def body(spark: SparkSession, batch_df: DataFrame, batch_id: int) -> None:
+        batch_df = persist_tracked(batch_df)
+        spans = None
+        # only batches strictly BEFORE this one: a replayed batch must
+        # not join against its own half-written previous attempt
+        idx = read_incremental_zone(spark, index_dir, batch_id, idx_prefix)
+        if idx is not None:
+            spans = incremental_substring_spans(
+                batch_df,
+                corpus_docs=read_incremental_zone(spark, docs_dir, batch_id),
+                corpus_windows=idx,
+                width=w,
+                doc_cap=cap,
+                bucket_by_hash=True,
+            ).select(*out_cols)
+        if pair_within_batch:
+            within = duplicate_substring_spans(
+                batch_df, width=w, doc_cap=cap, bucket_by_hash=True
+            ).select(
+                SF.col("doc_b").alias("new_doc"),
+                SF.col("doc_a").alias("corpus_doc"),
+                SF.col("start_b").alias("start_new"),
+                SF.col("start_a").alias("start_corpus"),
+                "span_len",
+                "n_windows",
             )
-        finally:
-            batch_df.unpersist()
+            spans = within if spans is None else spans.unionByName(within)
+        if spans is not None:
+            _put(spans, spans_dir, batch_id)
+        _put(batch_df.select("doc_id", "text"), docs_dir, batch_id)
+        _put(substring_windows(batch_df, width=w, hashed=True), index_dir, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _zone_stream(
+        stream, checkpoint_dir, body, compact_every=compact_every,
+        compactions=[
+            (index_dir, dict(
+                table_prefix=idx_prefix, bucket_keys=["win_h"],
+                buckets=compact_buckets, sort=["win_h"],
+            )),
+            (docs_dir, {}),
+        ],
     )
 
 
@@ -741,10 +839,9 @@ def streaming_bloom_membership(
     fill^k). Cost: one aggregate over ≤ m/32 merged word rows per batch.
     Returns the StreamingQuery handle; caller stops it.
     """
-    import hashlib
-
     from pyspark.sql import functions as SF
 
+    from ctcityscraper_spark.operators.artifacts import persist_tracked
     from ctcityscraper_spark.operators.dedup import (
         bloom_might_contain,
         bloom_saturation,
@@ -752,72 +849,34 @@ def streaming_bloom_membership(
         merge_bloom_words,
     )
 
-    tbl_prefix = compact_table_prefix or (
-        "bloom_words_" + hashlib.md5(words_dir.encode()).hexdigest()[:8]
-    )
+    tbl_prefix = _table_prefix(compact_table_prefix, "bloom_words", words_dir)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        # stamp the format marker on the first batch; every later batch
-        # (and a stream resumed under changed m_bits/k or a bumped
-        # BLOOM_FORMAT_VERSION) validates against it and fails loudly
-        # instead of silently mixing incompatible word positions
-        ensure_zone_meta(
-            spark, words_dir, _bloom_zone_meta(m_bits, k), _BLOOM_REBUILD_HINT
-        )
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            epochs = _compacted_epochs(spark, words_dir)
-            # <=: on replay after a crash between epoch commit and delta
-            # cleanup, an epoch for exactly batch_id already exists —
-            # still call compact (it skips the rewrite and finishes the
-            # pending stale-dir cleanup)
-            if not epochs or epochs[-1][0] <= batch_id:
-                compact_incremental_zone(
-                    spark, words_dir, batch_id, table_prefix=tbl_prefix,
-                    bucket_keys=["word_idx"], buckets=compact_buckets,
-                    sort=["word_idx"], transform=merge_bloom_words,
-                )
-        batch_df = batch_df.persist()
-        try:
-            bloom = read_bloom_words(spark, words_dir, batch_id, tbl_prefix)
-            if bloom is None:
-                # first batch: nothing ingested before it, nothing can flag
-                flags = batch_df.select(
-                    "doc_id", SF.lit(False).alias("might_contain")
-                )
-            else:
-                flags = bloom_might_contain(
-                    batch_df, bloom, m_bits, k
-                ).select("doc_id", "might_contain")
-            flags.write.mode("overwrite").parquet(
-                f"{flags_dir}/batch_id={batch_id}"
+    def body(spark: SparkSession, batch_df: DataFrame, batch_id: int) -> None:
+        batch_df = persist_tracked(batch_df)
+        bloom = read_bloom_words(spark, words_dir, batch_id, tbl_prefix)
+        if bloom is None:
+            # first batch: nothing ingested before it, nothing can flag
+            flags = batch_df.select("doc_id", SF.lit(False).alias("might_contain"))
+        else:
+            flags = bloom_might_contain(batch_df, bloom, m_bits, k).select(
+                "doc_id", "might_contain"
             )
-            delta = build_bloom_index(batch_df, m_bits, k).persist()
-            try:
-                delta.write.mode("overwrite").parquet(
-                    f"{words_dir}/batch_id={batch_id}"
-                )
-                if stats_dir is not None:
-                    now = (
-                        delta
-                        if bloom is None
-                        else bloom.unionByName(delta)
-                    )
-                    bloom_saturation(now, m_bits, k).write.mode(
-                        "overwrite"
-                    ).parquet(f"{stats_dir}/batch_id={batch_id}")
-            finally:
-                delta.unpersist()
-        finally:
-            batch_df.unpersist()
+        _put(flags, flags_dir, batch_id)
+        delta = persist_tracked(build_bloom_index(batch_df, m_bits, k))
+        _put(delta, words_dir, batch_id)
+        if stats_dir is not None:
+            now = delta if bloom is None else bloom.unionByName(delta)
+            _put(bloom_saturation(now, m_bits, k), stats_dir, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _zone_stream(
+        stream, checkpoint_dir, body,
+        meta=(words_dir, _bloom_zone_meta(m_bits, k), _BLOOM_REBUILD_HINT),
+        compact_every=compact_every,
+        compactions=[(words_dir, dict(
+            table_prefix=tbl_prefix, bucket_keys=["word_idx"],
+            buckets=compact_buckets, sort=["word_idx"],
+            transform=merge_bloom_words,
+        ))],
     )
 
 
@@ -901,66 +960,40 @@ def streaming_cms(
     merged cells per batch. Returns the StreamingQuery handle; caller
     stops it.
     """
-    import hashlib
-
+    from ctcityscraper_spark.operators.artifacts import persist_tracked
     from ctcityscraper_spark.operators.text import (
         cms_health,
         count_min_sketch,
         merge_cms_cells,
     )
 
-    tbl_prefix = compact_table_prefix or (
-        "cms_cells_" + hashlib.md5(cells_dir.encode()).hexdigest()[:8]
-    )
+    tbl_prefix = _table_prefix(compact_table_prefix, "cms_cells", cells_dir)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        # stamp-or-validate the (width, depth, seed, version) contract —
-        # see streaming_bloom_membership
-        ensure_zone_meta(
-            spark, cells_dir, _cms_zone_meta(width, depth, seed),
-            _CMS_REBUILD_HINT,
+    def body(spark: SparkSession, batch_df: DataFrame, batch_id: int) -> None:
+        delta = persist_tracked(
+            count_min_sketch(batch_df, width=width, depth=depth, seed=seed)
         )
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            epochs = _compacted_epochs(spark, cells_dir)
-            # <=: finish pending cleanup on replay (see bloom sink)
-            if not epochs or epochs[-1][0] <= batch_id:
-                compact_incremental_zone(
-                    spark, cells_dir, batch_id, table_prefix=tbl_prefix,
-                    bucket_keys=["r", "c"], buckets=compact_buckets,
-                    sort=["r", "c"], transform=merge_cms_cells,
+        _put(delta, cells_dir, batch_id)
+        if stats_dir is not None:
+            hist = read_incremental_zone(spark, cells_dir, batch_id, tbl_prefix)
+            now = (
+                delta
+                if hist is None
+                else hist.select("r", "c", "n").unionByName(
+                    delta.select("r", "c", "n")
                 )
-        delta = count_min_sketch(
-            batch_df, width=width, depth=depth, seed=seed
-        ).persist()
-        try:
-            delta.write.mode("overwrite").parquet(
-                f"{cells_dir}/batch_id={batch_id}"
             )
-            if stats_dir is not None:
-                hist = read_incremental_zone(
-                    spark, cells_dir, batch_id, tbl_prefix
-                )
-                now = (
-                    delta
-                    if hist is None
-                    else hist.select("r", "c", "n").unionByName(
-                        delta.select("r", "c", "n")
-                    )
-                )
-                cms_health(now, width, depth).write.mode(
-                    "overwrite"
-                ).parquet(f"{stats_dir}/batch_id={batch_id}")
-        finally:
-            delta.unpersist()
+            _put(cms_health(now, width, depth), stats_dir, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _zone_stream(
+        stream, checkpoint_dir, body,
+        meta=(cells_dir, _cms_zone_meta(width, depth, seed), _CMS_REBUILD_HINT),
+        compact_every=compact_every,
+        compactions=[(cells_dir, dict(
+            table_prefix=tbl_prefix, bucket_keys=["r", "c"],
+            buckets=compact_buckets, sort=["r", "c"],
+            transform=merge_cms_cells,
+        ))],
     )
 
 
@@ -1037,42 +1070,25 @@ def streaming_gram(
     bucketed on (j, l), so stored state stays d²-sized at any stream
     length. Returns the StreamingQuery handle; caller stops it.
     """
-    import hashlib
-
     from ctcityscraper_spark.operators.similarity import (
         int8_gram_matrix,
         merge_gram_rows,
     )
 
-    tbl_prefix = compact_table_prefix or (
-        "gram_rows_" + hashlib.md5(gram_dir.encode()).hexdigest()[:8]
-    )
+    tbl_prefix = _table_prefix(compact_table_prefix, "gram_rows", gram_dir)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        ensure_zone_meta(
-            spark, gram_dir, _gram_zone_meta(dims), _GRAM_REBUILD_HINT
-        )
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            epochs = _compacted_epochs(spark, gram_dir)
-            # <=: finish pending cleanup on replay (see bloom sink)
-            if not epochs or epochs[-1][0] <= batch_id:
-                compact_incremental_zone(
-                    spark, gram_dir, batch_id, table_prefix=tbl_prefix,
-                    bucket_keys=["j", "l"], buckets=compact_buckets,
-                    sort=["j", "l"], transform=merge_gram_rows,
-                )
-        int8_gram_matrix(batch_df, dims, vec).write.mode(
-            "overwrite"
-        ).parquet(f"{gram_dir}/batch_id={batch_id}")
+    def body(spark: SparkSession, batch_df: DataFrame, batch_id: int) -> None:
+        _put(int8_gram_matrix(batch_df, dims, vec), gram_dir, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _zone_stream(
+        stream, checkpoint_dir, body,
+        meta=(gram_dir, _gram_zone_meta(dims), _GRAM_REBUILD_HINT),
+        compact_every=compact_every,
+        compactions=[(gram_dir, dict(
+            table_prefix=tbl_prefix, bucket_keys=["j", "l"],
+            buckets=compact_buckets, sort=["j", "l"],
+            transform=merge_gram_rows,
+        ))],
     )
 
 
@@ -1146,30 +1162,14 @@ def streaming_kmv(
     stops it."""
     from ctcityscraper_spark.operators.text import kmv_sketch, merge_kmv
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        ensure_zone_meta(
-            spark, hashes_dir, _kmv_zone_meta(k, seed), _KMV_REBUILD_HINT
-        )
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            epochs = _compacted_epochs(spark, hashes_dir)
-            # <=: finish pending cleanup on replay (see bloom sink)
-            if not epochs or epochs[-1][0] <= batch_id:
-                compact_incremental_zone(
-                    spark, hashes_dir, batch_id,
-                    transform=lambda df: merge_kmv(df, k),
-                )
-        kmv_sketch(batch_df, text=text, k=k, seed=seed).write.mode(
-            "overwrite"
-        ).parquet(f"{hashes_dir}/batch_id={batch_id}")
+    def body(spark: SparkSession, batch_df: DataFrame, batch_id: int) -> None:
+        _put(kmv_sketch(batch_df, text=text, k=k, seed=seed), hashes_dir, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _zone_stream(
+        stream, checkpoint_dir, body,
+        meta=(hashes_dir, _kmv_zone_meta(k, seed), _KMV_REBUILD_HINT),
+        compact_every=compact_every,
+        compactions=[(hashes_dir, dict(transform=lambda df: merge_kmv(df, k)))],
     )
 
 
@@ -1257,54 +1257,36 @@ def streaming_quantile(
     over the stream's own history, so the distribution monitor reads the
     ledger, never the raw stream. Cost: one ≤ k-row merge + window per
     batch. Returns the StreamingQuery handle; caller stops it."""
+    from ctcityscraper_spark.operators.artifacts import persist_tracked
     from ctcityscraper_spark.operators.text import (
         merge_quantile_sketches,
         quantile_estimate,
         quantile_sketch,
     )
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        ensure_zone_meta(
-            spark, sample_dir, _quantile_zone_meta(k, seed, value_col),
-            _QUANTILE_REBUILD_HINT,
+    def body(spark: SparkSession, batch_df: DataFrame, batch_id: int) -> None:
+        delta = persist_tracked(
+            quantile_sketch(batch_df, value_col, id_col, k=k, seed=seed)
         )
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            epochs = _compacted_epochs(spark, sample_dir)
-            # <=: finish pending cleanup on replay (see bloom sink)
-            if not epochs or epochs[-1][0] <= batch_id:
-                compact_incremental_zone(
-                    spark, sample_dir, batch_id,
-                    transform=lambda df: merge_quantile_sketches(df, k),
-                )
-        delta = quantile_sketch(
-            batch_df, value_col, id_col, k=k, seed=seed
-        ).persist()
-        try:
-            delta.write.mode("overwrite").parquet(
-                f"{sample_dir}/batch_id={batch_id}"
+        _put(delta, sample_dir, batch_id)
+        if stats_dir is not None:
+            hist = read_incremental_zone(spark, sample_dir, batch_id)
+            now = merge_quantile_sketches(
+                delta if hist is None else hist.unionByName(
+                    delta.select(*hist.columns)
+                ),
+                k,
             )
-            if stats_dir is not None:
-                hist = read_incremental_zone(spark, sample_dir, batch_id)
-                now = merge_quantile_sketches(
-                    delta if hist is None else hist.unionByName(
-                        delta.select(*hist.columns)
-                    ),
-                    k,
-                )
-                quantile_estimate(now).write.mode("overwrite").parquet(
-                    f"{stats_dir}/batch_id={batch_id}"
-                )
-        finally:
-            delta.unpersist()
+            _put(quantile_estimate(now), stats_dir, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _zone_stream(
+        stream, checkpoint_dir, body,
+        meta=(sample_dir, _quantile_zone_meta(k, seed, value_col),
+              _QUANTILE_REBUILD_HINT),
+        compact_every=compact_every,
+        compactions=[(sample_dir, dict(
+            transform=lambda df: merge_quantile_sketches(df, k),
+        ))],
     )
 
 
@@ -1499,6 +1481,10 @@ def streaming_corpus_prep(
     from pyspark.sql import functions as SF
 
     from ctcityscraper_spark.functions.hashing import hash64
+    from ctcityscraper_spark.operators.artifacts import (
+        checkpoint_tracked,
+        persist_tracked,
+    )
     from ctcityscraper_spark.operators.corpus import (
         BOILER_MIN_DOCS,
         PACK_SEQ_LEN,
@@ -1507,6 +1493,7 @@ def streaming_corpus_prep(
         pack_sequences,
         remove_boilerplate,
         segments,
+        sum_dsir_models,
     )
     from ctcityscraper_spark.operators.dedup import (
         bloom_chased_duplicates,
@@ -1521,8 +1508,6 @@ def streaming_corpus_prep(
         kmv_sketch_terms,
         merge_kmv,
     )
-
-    import hashlib
 
     if dsir_gate and not dsir_target:
         raise ValueError(
@@ -1559,9 +1544,7 @@ def streaming_corpus_prep(
         "dsir_min_num": int(dsir_min_num),
         "dsir_min_den": int(dsir_min_den),
     })
-    bloom_tbl_prefix = (
-        "prep_bloom_" + hashlib.md5(base_dir.encode()).hexdigest()[:8]
-    )
+    bloom_tbl_prefix = _table_prefix(None, "prep_bloom", base_dir)
     z = {
         name: f"{base_dir}/{name}"
         for name in (
@@ -1571,452 +1554,358 @@ def streaming_corpus_prep(
         )
     }
 
-    def _put(df: DataFrame, zone: str, batch_id: int) -> None:
-        df.write.mode("overwrite").parquet(f"{z[zone]}/batch_id={batch_id}")
-
-    def _compact_state_zones(spark, batch_id: int) -> None:
-        # every STATE zone re-aggregates under its own merge; outputs
-        # (packs/stats) stay per-batch. The <= epoch guard matches the
-        # other sinks: finish pending cleanup on replay.
-        def seg_merge(df):
-            # the bounding snapshot (zone docstring's count-loss
-            # contract): SUM-merge, keep counts >= seg_tail_min, plus a
-            # deterministic hash-ranked sample of <= seg_tail_k of the
-            # dropped singleton tail (TakeOrderedAndProject — bounded)
-            merged = df.groupBy("segment").agg(
-                SF.sum("n_docs").alias("n_docs")
-            )
-            kept_rows = merged.filter(SF.col("n_docs") >= seg_tail_min)
-            if seg_tail_k <= 0:
-                return kept_rows
-            sampled = (
-                merged.filter(SF.col("n_docs") < seg_tail_min)
-                .orderBy(hash64(SF.col("segment"), "segtail"), "segment")
-                .limit(seg_tail_k)
-            )
-            return kept_rows.unionByName(sampled)
-
-        def cur_merge(df):
-            return df.groupBy("shard_id").agg(
-                SF.sum("n_tokens").alias("n_tokens")
-            )
-
-        from ctcityscraper_spark.operators.corpus import sum_dsir_models
-        from ctcityscraper_spark.operators.dedup import merge_bloom_words
-        from ctcityscraper_spark.operators.text import merge_kmv
-
-        plans = [
-            ("seg_counts", dict(transform=seg_merge)),
-            ("cursors", dict(transform=cur_merge)),
-            ("fingerprints", dict(transform=lambda df: df.distinct())),
-            ("test_shingles", dict(transform=lambda df: df.distinct())),
-            ("train_kmv", dict(transform=lambda df: merge_kmv(df, kmv_k))),
-            ("test_kmv", dict(transform=lambda df: merge_kmv(df, kmv_k))),
-            ("dsir_model", dict(transform=sum_dsir_models)),
-            (
-                "bloom_words",
-                dict(
-                    transform=merge_bloom_words,
-                    bucket_keys=["word_idx"],
-                    buckets=4,
-                    sort=["word_idx"],
-                    table_prefix=bloom_tbl_prefix,
-                ),
-            ),
-        ]
-        for zone, kw in plans:
-            epochs = _compacted_epochs(spark, z[zone])
-            if not epochs or epochs[-1][0] <= batch_id:
-                compact_incremental_zone(spark, z[zone], batch_id, **kw)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        ensure_zone_meta(
-            spark, base_dir, meta, _PREP_REBUILD_HINT,
-            data_dirs=list(z.values()),
+    def seg_merge(df):
+        # the bounding snapshot (zone docstring's count-loss
+        # contract): SUM-merge, keep counts >= seg_tail_min, plus a
+        # deterministic hash-ranked sample of <= seg_tail_k of the
+        # dropped singleton tail (TakeOrderedAndProject — bounded)
+        merged = df.groupBy("segment").agg(SF.sum("n_docs").alias("n_docs"))
+        kept_rows = merged.filter(SF.col("n_docs") >= seg_tail_min)
+        if seg_tail_k <= 0:
+            return kept_rows
+        sampled = (
+            merged.filter(SF.col("n_docs") < seg_tail_min)
+            .orderBy(hash64(SF.col("segment"), "segtail"), "segment")
+            .limit(seg_tail_k)
         )
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            _compact_state_zones(spark, batch_id)
-        batch_df = batch_df.persist()
-        # every multi-consumer stage frame persists for the batch and
-        # unpersists in the finally — never clearCache (it would drop
-        # caller-owned caches too)
-        persisted: list[DataFrame] = []
-        ckpt_rdd_ids: set[int] = set()
+        return kept_rows.unionByName(sampled)
 
-        def _p(df: DataFrame) -> DataFrame:
-            persisted.append(df.persist())
-            return df
+    # every STATE zone re-aggregates under its own merge; outputs
+    # (packs/stats) and the qclf_weights ledger stay per-batch
+    compactions = [
+        (z["seg_counts"], dict(transform=seg_merge)),
+        (z["cursors"], dict(transform=lambda df: df.groupBy("shard_id").agg(
+            SF.sum("n_tokens").alias("n_tokens")
+        ))),
+        (z["fingerprints"], dict(transform=lambda df: df.distinct())),
+        (z["test_shingles"], dict(transform=lambda df: df.distinct())),
+        (z["train_kmv"], dict(transform=lambda df: merge_kmv(df, kmv_k))),
+        (z["test_kmv"], dict(transform=lambda df: merge_kmv(df, kmv_k))),
+        (z["dsir_model"], dict(transform=sum_dsir_models)),
+        (z["bloom_words"], dict(
+            transform=merge_bloom_words, bucket_keys=["word_idx"], buckets=4,
+            sort=["word_idx"], table_prefix=bloom_tbl_prefix,
+        )),
+    ]
 
-        def _cut(df: DataFrame) -> DataFrame:
-            # eager lineage CUT for a small frame about to be joined
-            # back against its own deep upstream (the batch twin's
-            # checkpoint_tracked move): persist caches data but every
-            # consumer still re-analyzes the full logical tree, and a
-            # stage that doubles the tree (gate ids anti-joined into
-            # the stream they came from) can overflow the driver's
-            # analysis stack. The checkpoint blocks are freed in the
-            # finally, so the zero-driver-state invariant
-            # (TestStreamingDriverState) holds across batches.
-            from ctcityscraper_spark.operators.graph import (
-                persistent_rdd_ids,
+    def body(spark: SparkSession, batch_df: DataFrame, batch_id: int) -> None:
+        # every multi-consumer stage frame is persist_tracked and every
+        # lineage cut checkpoint_tracked, so the runner's scope frees
+        # both at batch end — never clearCache (it would drop
+        # caller-owned caches too). A cut is the batch twin's move for a
+        # small frame about to be joined back against its own deep
+        # upstream: persist caches data but every consumer still
+        # re-analyzes the full logical tree, and a stage that doubles the
+        # tree (gate ids anti-joined into the stream they came from) can
+        # overflow the driver's analysis stack.
+        batch_df = persist_tracked(batch_df)
+        # -- stage 1: boilerplate (hot list = strictly-before merge) --
+        seg_hist = read_incremental_zone(spark, z["seg_counts"], batch_id)
+        hot = (
+            seg_hist.groupBy("segment")
+            .agg(SF.sum("n_docs").alias("n_docs"))
+            .filter(SF.col("n_docs") >= md)
+            .select("segment")
+            if seg_hist is not None
+            else spark.createDataFrame([], "segment string")
+        )
+        batch = persist_tracked(
+            remove_boilerplate(batch_df, width=w, min_docs=md, hot=hot)
+            .select("doc_id", "clean_text")
+        )
+
+        # -- stage 2: two-tier exact dedup vs strictly-before state --
+        bloom = read_incremental_zone(
+            spark, z["bloom_words"], batch_id, bloom_tbl_prefix
+        )
+        fps = read_incremental_zone(spark, z["fingerprints"], batch_id)
+        if bloom is not None and fps is not None:
+            verdicts = bloom_chased_duplicates(
+                batch, fps, merge_bloom_words(bloom), m_bits, k,
+                text="clean_text",
+            )
+            dup_hist = verdicts.filter(SF.col("is_dup")).select("doc_id")
+        else:
+            dup_hist = batch.select("doc_id").filter(SF.lit(False))
+        # within-batch exact dups: keep the lowest doc_id occurrence
+        from pyspark.sql import Window as _W
+
+        w_fp = _W.partitionBy(SF.md5("clean_text")).orderBy("doc_id")
+        dup_within = (
+            batch.withColumn("_rn", SF.row_number().over(w_fp))
+            .filter(SF.col("_rn") > 1)
+            .select("doc_id")
+        )
+        # dup_ids is a small id list joined back against the stream
+        # it came from, and kept is the stage frame EVERY later stage
+        # (contamination, quality, DSIR, packing, five zone deltas,
+        # the stats row) builds on. Persist alone left the full
+        # bloom-chase lineage in the analyzed plan of every one of
+        # those ~12 downstream actions — profiled at 149 s of
+        # driver-only gaps vs 68 s of execution over a 3-batch
+        # availableNow run (r16; guide §7.3 planning bottleneck).
+        # The eager cut bounds every downstream plan at this stage
+        # boundary, and a batch retry recomputes from the checkpoint's
+        # own batch input.
+        dup_ids = checkpoint_tracked(dup_hist.unionByName(dup_within).distinct())
+        # kept is batch-sized, not the small frame checkpoint_tracked's
+        # contract asks for: it is bounded by the trigger size
+        # (max_files_per_trigger on the source) and released at batch
+        # end by the runner's scope
+        kept = checkpoint_tracked(batch.join(dup_ids, "doc_id", "left_anti"))
+
+        # -- stage 3: contamination gate. The index side is the
+        # strictly-before zone UNIONED with the batch's OWN test
+        # docs' shingles — a train doc contaminated by a test doc
+        # arriving in the SAME micro-batch must be dropped too
+        # (matching the batch twin, whose contamination_pairs runs
+        # over all of kept; replay-safe because the batch's own
+        # shingles derive from batch_df, never from a half-written
+        # zone delta) --
+        is_test = hash64(SF.col("doc_id"), "split") % test_mod == 0
+        batch_test_sh = persist_tracked(
+            doc_shingles(kept.filter(is_test), "clean_text", "doc_id", shingle_n)
+            .select("shingle")
+            .distinct()
+        )
+        tidx = read_incremental_zone(spark, z["test_shingles"], batch_id)
+        tidx_now = (
+            batch_test_sh
+            if tidx is None
+            else tidx.select("shingle").unionByName(batch_test_sh)
+        )
+        train = kept.filter(~is_test)
+        # same move as dup_ids: a small id list anti-joined into the
+        # stream it was derived from — cut, or every consumer of
+        # trainf re-analyzes the whole shingle-index join
+        contam = checkpoint_tracked(
+            doc_shingles(train, "clean_text", "doc_id", shingle_n)
+            .join(tidx_now, "shingle", "left_semi")
+            .select("doc_id")
+            .distinct()
+        )
+        trainf = persist_tracked(train.join(contam, "doc_id", "left_anti"))
+
+        # -- stage 3.5: trained quality gate (opt-in). Apply the
+        # LATEST strictly-before weights; batch 0's train docs pass
+        # ungated (no weights yet — the hot-list one-batch lag).
+        # Refresh = retrain on THIS batch's kept docs at batch 0 and
+        # at every compact_every boundary; deterministic fit → the
+        # batch_id=N overwrite is replay-idempotent. --
+        trainq = trainf
+        qdrop_df = None
+        if quality_gate:
+            from ctcityscraper_spark.operators.text import (
+                quality_classifier_logit_col,
+                quality_score_col,
+                train_quality_classifier,
             )
 
-            before_ids = persistent_rdd_ids(spark)
-            out = df.localCheckpoint(eager=True)
-            ckpt_rdd_ids.update(persistent_rdd_ids(spark) - before_ids)
-            return out
-
-        try:
-            # -- stage 1: boilerplate (hot list = strictly-before merge) --
-            seg_hist = read_incremental_zone(spark, z["seg_counts"], batch_id)
-            hot = (
-                seg_hist.groupBy("segment")
-                .agg(SF.sum("n_docs").alias("n_docs"))
-                .filter(SF.col("n_docs") >= md)
-                .select("segment")
-                if seg_hist is not None
-                else spark.createDataFrame([], "segment string")
+            wz = read_incremental_zone(spark, z["qclf_weights"], batch_id)
+            wrow = (
+                wz.orderBy(SF.col("trained_batch").desc())
+                .limit(1)
+                .collect()
+                if wz is not None
+                else []
             )
-            batch = _p(
-                remove_boilerplate(batch_df, width=w, min_docs=md, hot=hot)
-                .select("doc_id", "clean_text")
-            )
-
-            # -- stage 2: two-tier exact dedup vs strictly-before state --
-            bloom = read_incremental_zone(
-                spark, z["bloom_words"], batch_id, bloom_tbl_prefix
-            )
-            fps = read_incremental_zone(spark, z["fingerprints"], batch_id)
-            if bloom is not None and fps is not None:
-                verdicts = bloom_chased_duplicates(
-                    batch, fps, merge_bloom_words(bloom), m_bits, k,
+            if wrow:
+                r = wrow[0]
+                weights = [r.w0, r.w1, r.w2, r.w3, r.w4, r.b]
+                logit = quality_classifier_logit_col("clean_text", weights)
+                trainq = persist_tracked(trainf.filter(logit > 0))
+                qdrop_df = trainf.filter(~(logit > 0)).agg(
+                    SF.count("*").cast("long").alias("n_quality_dropped")
+                )
+            refresh = (not wrow) or (compact_every and batch_id % compact_every == 0)
+            if refresh and not kept.isEmpty():
+                new_w = train_quality_classifier(
+                    kept,
                     text="clean_text",
-                )
-                dup_hist = verdicts.filter(SF.col("is_dup")).select("doc_id")
-            else:
-                dup_hist = batch.select("doc_id").filter(SF.lit(False))
-            # within-batch exact dups: keep the lowest doc_id occurrence
-            from pyspark.sql import Window as _W
-
-            w_fp = _W.partitionBy(SF.md5("clean_text")).orderBy("doc_id")
-            dup_within = (
-                batch.withColumn("_rn", SF.row_number().over(w_fp))
-                .filter(SF.col("_rn") > 1)
-                .select("doc_id")
-            )
-            # dup_ids is a small id list joined back against the stream
-            # it came from, and kept is the stage frame EVERY later stage
-            # (contamination, quality, DSIR, packing, five zone deltas,
-            # the stats row) builds on. Persist alone left the full
-            # bloom-chase lineage in the analyzed plan of every one of
-            # those ~12 downstream actions — profiled at 149 s of
-            # driver-only gaps vs 68 s of execution over a 3-batch
-            # availableNow run (r16; guide §7.3 planning bottleneck).
-            # The eager cut bounds every downstream plan at this stage
-            # boundary; blocks are freed in the finally, and a batch
-            # retry recomputes from the checkpoint's own batch input.
-            dup_ids = _cut(dup_hist.unionByName(dup_within).distinct())
-            kept = _cut(batch.join(dup_ids, "doc_id", "left_anti"))
-
-            # -- stage 3: contamination gate. The index side is the
-            # strictly-before zone UNIONED with the batch's OWN test
-            # docs' shingles — a train doc contaminated by a test doc
-            # arriving in the SAME micro-batch must be dropped too
-            # (matching the batch twin, whose contamination_pairs runs
-            # over all of kept; replay-safe because the batch's own
-            # shingles derive from batch_df, never from a half-written
-            # zone delta) --
-            is_test = hash64(SF.col("doc_id"), "split") % test_mod == 0
-            batch_test_sh = _p(
-                doc_shingles(
-                    kept.filter(is_test), "clean_text", "doc_id", shingle_n
-                )
-                .select("shingle")
-                .distinct()
-            )
-            tidx = read_incremental_zone(spark, z["test_shingles"], batch_id)
-            tidx_now = (
-                batch_test_sh
-                if tidx is None
-                else tidx.select("shingle").unionByName(batch_test_sh)
-            )
-            train = kept.filter(~is_test)
-            # same move as dup_ids: a small id list anti-joined into the
-            # stream it was derived from — cut, or every consumer of
-            # trainf re-analyzes the whole shingle-index join
-            contam = _cut(
-                doc_shingles(train, "clean_text", "doc_id", shingle_n)
-                .join(tidx_now, "shingle", "left_semi")
-                .select("doc_id")
-                .distinct()
-            )
-            trainf = _p(train.join(contam, "doc_id", "left_anti"))
-
-            # -- stage 3.5: trained quality gate (opt-in). Apply the
-            # LATEST strictly-before weights; batch 0's train docs pass
-            # ungated (no weights yet — the hot-list one-batch lag).
-            # Refresh = retrain on THIS batch's kept docs at batch 0 and
-            # at every compact_every boundary; deterministic fit → the
-            # batch_id=N overwrite is replay-idempotent. --
-            trainq = trainf
-            qdrop_df = None
-            if quality_gate:
-                from ctcityscraper_spark.operators.text import (
-                    quality_classifier_logit_col,
-                    quality_score_col,
-                    train_quality_classifier,
-                )
-
-                wz = read_incremental_zone(
-                    spark, z["qclf_weights"], batch_id
-                )
-                wrow = (
-                    wz.orderBy(SF.col("trained_batch").desc())
-                    .limit(1)
-                    .collect()
-                    if wz is not None
-                    else []
-                )
-                if wrow:
-                    r = wrow[0]
-                    weights = [r.w0, r.w1, r.w2, r.w3, r.w4, r.b]
-                    logit = quality_classifier_logit_col(
-                        "clean_text", weights
-                    )
-                    trainq = _p(trainf.filter(logit > 0))
-                    qdrop_df = trainf.filter(~(logit > 0)).agg(
-                        SF.count("*").cast("long").alias("n_quality_dropped")
-                    )
-                refresh = (not wrow) or (
-                    compact_every and batch_id % compact_every == 0
-                )
-                if refresh and not kept.isEmpty():
-                    new_w = train_quality_classifier(
-                        kept,
-                        text="clean_text",
-                        labels=quality_score_col("clean_text")
-                        >= quality_teacher,
-                    )
-                    _put(
-                        spark.createDataFrame(
-                            [tuple(new_w) + (batch_id,)],
-                            "w0 double, w1 double, w2 double, w3 double, "
-                            "w4 double, b double, trained_batch long",
-                        ),
-                        "qclf_weights",
-                        batch_id,
-                    )
-
-            # -- stage 3.7: DSIR domain gate (opt-in). Score against the
-            # strictly-before merged model zone (unseen batch buckets
-            # take dsir_score_with_model's smoothing floor); batch 0
-            # passes ungated (no model yet — the one-batch lag); every
-            # batch appends its own ≤ dsir_buckets-row model delta
-            # (target labels evaluated on the RAW batch columns before
-            # the doc_id/clean_text narrowing). --
-            traind = trainq
-            ddrop_df = None
-            if dsir_gate:
-                from ctcityscraper_spark.operators.corpus import (
-                    dsir_bucket_model,
-                    dsir_score_with_model,
-                    sum_dsir_models,
-                )
-
-                mz = read_incremental_zone(spark, z["dsir_model"], batch_id)
-                if mz is not None:
-                    scored = dsir_score_with_model(
-                        trainq, sum_dsir_models(mz),
-                        n_buckets=dsir_buckets, text="clean_text",
-                    )
-                    drop_ids = _cut(
-                        scored.filter(
-                            SF.col("weight_bits") * dsir_min_den
-                            < dsir_min_num * SF.col("n_tokens")
-                        ).select("doc_id")
-                    )
-                    traind = _p(trainq.join(drop_ids, "doc_id", "left_anti"))
-                    ddrop_df = drop_ids.agg(
-                        SF.count("*").cast("long").alias("n_dsir_dropped")
-                    )
-                labels = batch_df.select(
-                    "doc_id", SF.expr(dsir_target).alias("is_target")
+                    labels=quality_score_col("clean_text") >= quality_teacher,
                 )
                 _put(
-                    dsir_bucket_model(
-                        kept.join(labels, "doc_id", "left"),
-                        SF.col("is_target"),
-                        n_buckets=dsir_buckets,
-                        text="clean_text",
+                    spark.createDataFrame(
+                        [tuple(new_w) + (batch_id,)],
+                        "w0 double, w1 double, w2 double, w3 double, "
+                        "w4 double, b double, trained_batch long",
                     ),
-                    "dsir_model",
+                    z["qclf_weights"],
                     batch_id,
                 )
 
-            # -- stage 4: pack continuation from strictly-before cursors --
-            cur_hist = read_incremental_zone(spark, z["cursors"], batch_id)
-            cursor = (
-                cur_hist.groupBy("shard_id")
-                .agg(SF.sum("n_tokens").alias("base_off"))
-                if cur_hist is not None
-                else None
-            )
-            packs = _p(
-                pack_sequences(
-                    traind, text="clean_text", seq_len=sl, num_shards=ns,
-                    base_offsets=cursor,
-                )
-            )
-
-            # -- outputs + this batch's own zone deltas: mutually
-            # independent overwrite jobs over already-cut/persisted stage
-            # frames, overlapped in a small driver pool (guide §2.6 — the
-            # engine.run_load pattern; serial cost was the SUM of the
-            # write round-trips, now the slowest few). Exactly-once is
-            # unchanged: each write is still its own batch_id=N
-            # overwrite, and a crash mid-pool leaves the same
-            # some-zones-written state a crash mid-serial-sequence did —
-            # the replayed batch rewrites every zone either way. The
-            # cursor delta stays ordered behind packs in ITS OWN task
-            # (it reads the packs cache); stats stays after the pool (it
-            # reads the delta caches the pool materializes). --
-            surv = kept  # survivors extend dedup state (test docs too:
-            # a future re-ingest of a held-out doc is still a duplicate)
-            bloom_delta = _p(
-                build_bloom_index(surv, m_bits, k, text="clean_text")
-            )
-            sh3 = lambda d: d.select(
-                SF.explode(shingles_col("clean_text", 3)).alias("term")
-            )
-            # the train sketch tracks the stream that is actually
-            # PACKED — post-quality AND post-DSIR
-            train_kmv_delta = _p(
-                kmv_sketch_terms(sh3(traind), "term", k=kmv_k)
-            )
-            test_kmv_delta = _p(
-                kmv_sketch_terms(sh3(kept.filter(is_test)), "term", k=kmv_k)
-            )
-            seg_delta = (
-                segments(batch_df, width=w)
-                .select("segment", "doc_id")
-                .distinct()
-                .groupBy("segment")
-                .agg(SF.count("*").alias("n_docs"))
-            )
-            fp_delta = (
-                surv.select(SF.md5("clean_text").alias("fingerprint"))
-                .distinct()
+        # -- stage 3.7: DSIR domain gate (opt-in). Score against the
+        # strictly-before merged model zone (unseen batch buckets
+        # take dsir_score_with_model's smoothing floor); batch 0
+        # passes ungated (no model yet — the one-batch lag); every
+        # batch appends its own ≤ dsir_buckets-row model delta
+        # (target labels evaluated on the RAW batch columns before
+        # the doc_id/clean_text narrowing). --
+        traind = trainq
+        ddrop_df = None
+        if dsir_gate:
+            from ctcityscraper_spark.operators.corpus import (
+                dsir_bucket_model,
+                dsir_score_with_model,
             )
 
-            def _packs_then_cursor() -> None:
-                _put(packs, "packs", batch_id)
-                _put(
-                    packs.groupBy("shard_id").agg(
-                        SF.sum("n_tokens").alias("n_tokens")
-                    ),
-                    "cursors",
-                    batch_id,
+            mz = read_incremental_zone(spark, z["dsir_model"], batch_id)
+            if mz is not None:
+                scored = dsir_score_with_model(
+                    trainq, sum_dsir_models(mz),
+                    n_buckets=dsir_buckets, text="clean_text",
                 )
+                drop_ids = checkpoint_tracked(
+                    scored.filter(
+                        SF.col("weight_bits") * dsir_min_den
+                        < dsir_min_num * SF.col("n_tokens")
+                    ).select("doc_id")
+                )
+                traind = persist_tracked(
+                    trainq.join(drop_ids, "doc_id", "left_anti")
+                )
+                ddrop_df = drop_ids.agg(
+                    SF.count("*").cast("long").alias("n_dsir_dropped")
+                )
+            labels = batch_df.select("doc_id", SF.expr(dsir_target).alias("is_target"))
+            _put(
+                dsir_bucket_model(
+                    kept.join(labels, "doc_id", "left"),
+                    SF.col("is_target"),
+                    n_buckets=dsir_buckets,
+                    text="clean_text",
+                ),
+                z["dsir_model"],
+                batch_id,
+            )
 
-            from concurrent.futures import ThreadPoolExecutor
+        # -- stage 4: pack continuation from strictly-before cursors --
+        cur_hist = read_incremental_zone(spark, z["cursors"], batch_id)
+        cursor = (
+            cur_hist.groupBy("shard_id")
+            .agg(SF.sum("n_tokens").alias("base_off"))
+            if cur_hist is not None
+            else None
+        )
+        packs = persist_tracked(
+            pack_sequences(
+                traind, text="clean_text", seq_len=sl, num_shards=ns,
+                base_offsets=cursor,
+            )
+        )
 
-            with ThreadPoolExecutor(max_workers=4) as pool:
-                futs = [
-                    pool.submit(_packs_then_cursor),
-                    pool.submit(_put, seg_delta, "seg_counts", batch_id),
-                    pool.submit(_put, bloom_delta, "bloom_words", batch_id),
-                    pool.submit(_put, fp_delta, "fingerprints", batch_id),
-                    pool.submit(
-                        _put, batch_test_sh, "test_shingles", batch_id
-                    ),
-                    pool.submit(
-                        _put, train_kmv_delta, "train_kmv", batch_id
-                    ),
-                    pool.submit(_put, test_kmv_delta, "test_kmv", batch_id),
-                ]
-                for fut in futs:
-                    fut.result()
+        # -- outputs + this batch's own zone deltas: mutually
+        # independent overwrite jobs over already-cut/persisted stage
+        # frames, overlapped in a small driver pool (guide §2.6 — the
+        # engine.run_load pattern; serial cost was the SUM of the
+        # write round-trips, now the slowest few). Exactly-once is
+        # unchanged: each write is still its own batch_id=N
+        # overwrite, and a crash mid-pool leaves the same
+        # some-zones-written state a crash mid-serial-sequence did —
+        # the replayed batch rewrites every zone either way. The
+        # cursor delta stays ordered behind packs in ITS OWN task
+        # (it reads the packs cache); stats stays after the pool (it
+        # reads the delta caches the pool materializes). --
+        surv = kept  # survivors extend dedup state (test docs too:
+        # a future re-ingest of a held-out doc is still a duplicate)
+        bloom_delta = persist_tracked(
+            build_bloom_index(surv, m_bits, k, text="clean_text")
+        )
+        sh3 = lambda d: d.select(
+            SF.explode(shingles_col("clean_text", 3)).alias("term")
+        )
+        # the train sketch tracks the stream that is actually
+        # PACKED — post-quality AND post-DSIR
+        train_kmv_delta = persist_tracked(
+            kmv_sketch_terms(sh3(traind), "term", k=kmv_k)
+        )
+        test_kmv_delta = persist_tracked(
+            kmv_sketch_terms(sh3(kept.filter(is_test)), "term", k=kmv_k)
+        )
+        seg_delta = (
+            segments(batch_df, width=w)
+            .select("segment", "doc_id")
+            .distinct()
+            .groupBy("segment")
+            .agg(SF.count("*").alias("n_docs"))
+        )
+        fp_delta = surv.select(SF.md5("clean_text").alias("fingerprint")).distinct()
 
-            # -- the stats ledger: attrition + health monitors over the
-            # state AS OF THE END of this batch (strictly-before zones +
-            # this batch's own deltas — deterministic under replay) --
-            if qdrop_df is None:
-                qdrop_df = spark.range(1).select(
-                    SF.lit(0).cast("long").alias("n_quality_dropped")
-                )
-            if ddrop_df is None:
-                # 0 when the DSIR gate is off or not yet armed (batch 0)
-                # — same always-present convention as n_quality_dropped
-                ddrop_df = spark.range(1).select(
-                    SF.lit(0).cast("long").alias("n_dsir_dropped")
-                )
-            bloom_now = (
-                bloom_delta
-                if bloom is None
-                else bloom.unionByName(bloom_delta)
+        def _packs_then_cursor() -> None:
+            _put(packs, z["packs"], batch_id)
+            _put(
+                packs.groupBy("shard_id").agg(SF.sum("n_tokens").alias("n_tokens")),
+                z["cursors"],
+                batch_id,
             )
-            saturation = bloom_saturation(bloom_now, m_bits, k).select(
-                SF.col("fill").alias("bloom_fill"),
-                SF.col("est_fpp").alias("bloom_est_fpp"),
-            )
-            kmv_hist_tr = read_incremental_zone(
-                spark, z["train_kmv"], batch_id
-            )
-            kmv_hist_te = read_incremental_zone(
-                spark, z["test_kmv"], batch_id
-            )
-            train_kmv_now = merge_kmv(
-                train_kmv_delta
-                if kmv_hist_tr is None
-                else kmv_hist_tr.unionByName(train_kmv_delta),
-                kmv_k,
-            )
-            test_kmv_now = merge_kmv(
-                test_kmv_delta
-                if kmv_hist_te is None
-                else kmv_hist_te.unionByName(test_kmv_delta),
-                kmv_k,
-            )
-            resid = kmv_overlap(train_kmv_now, test_kmv_now, kmv_k).select(
-                SF.col("inter_est").alias("resid_inter_est"),
-                SF.col("jaccard_est").alias("resid_jaccard_est"),
-            )
-            stats = (
-                batch.agg(SF.count("*").alias("n_batch_in"))
-                .crossJoin(dup_ids.agg(SF.count("*").alias("n_dup_dropped")))
-                .crossJoin(
-                    kept.filter(is_test).agg(
-                        SF.count("*").alias("n_test_held_out")
-                    )
-                )
-                .crossJoin(
-                    contam.agg(SF.count("*").alias("n_contam_dropped"))
-                )
-                .crossJoin(qdrop_df)
-                .crossJoin(ddrop_df)
-                .crossJoin(saturation)
-                .crossJoin(resid)
-            )
-            _put(stats, "stats", batch_id)
-        finally:
-            batch_df.unpersist()
-            for df in persisted:
-                df.unpersist()
-            if ckpt_rdd_ids:
-                from ctcityscraper_spark.operators.graph import (
-                    unpersist_rdd_ids,
-                )
 
-                unpersist_rdd_ids(spark, ckpt_rdd_ids)
+        from concurrent.futures import ThreadPoolExecutor
 
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        with ThreadPoolExecutor(max_workers=4) as pool:
+            futs = [
+                pool.submit(_packs_then_cursor),
+                pool.submit(_put, seg_delta, z["seg_counts"], batch_id),
+                pool.submit(_put, bloom_delta, z["bloom_words"], batch_id),
+                pool.submit(_put, fp_delta, z["fingerprints"], batch_id),
+                pool.submit(_put, batch_test_sh, z["test_shingles"], batch_id),
+                pool.submit(_put, train_kmv_delta, z["train_kmv"], batch_id),
+                pool.submit(_put, test_kmv_delta, z["test_kmv"], batch_id),
+            ]
+            for fut in futs:
+                fut.result()
+
+        # -- the stats ledger: attrition + health monitors over the
+        # state AS OF THE END of this batch (strictly-before zones +
+        # this batch's own deltas — deterministic under replay) --
+        if qdrop_df is None:
+            qdrop_df = spark.range(1).select(
+                SF.lit(0).cast("long").alias("n_quality_dropped")
+            )
+        if ddrop_df is None:
+            # 0 when the DSIR gate is off or not yet armed (batch 0)
+            # — same always-present convention as n_quality_dropped
+            ddrop_df = spark.range(1).select(
+                SF.lit(0).cast("long").alias("n_dsir_dropped")
+            )
+        bloom_now = bloom_delta if bloom is None else bloom.unionByName(bloom_delta)
+        saturation = bloom_saturation(bloom_now, m_bits, k).select(
+            SF.col("fill").alias("bloom_fill"),
+            SF.col("est_fpp").alias("bloom_est_fpp"),
+        )
+        kmv_hist_tr = read_incremental_zone(spark, z["train_kmv"], batch_id)
+        kmv_hist_te = read_incremental_zone(spark, z["test_kmv"], batch_id)
+        train_kmv_now = merge_kmv(
+            train_kmv_delta
+            if kmv_hist_tr is None
+            else kmv_hist_tr.unionByName(train_kmv_delta),
+            kmv_k,
+        )
+        test_kmv_now = merge_kmv(
+            test_kmv_delta
+            if kmv_hist_te is None
+            else kmv_hist_te.unionByName(test_kmv_delta),
+            kmv_k,
+        )
+        resid = kmv_overlap(train_kmv_now, test_kmv_now, kmv_k).select(
+            SF.col("inter_est").alias("resid_inter_est"),
+            SF.col("jaccard_est").alias("resid_jaccard_est"),
+        )
+        stats = (
+            batch.agg(SF.count("*").alias("n_batch_in"))
+            .crossJoin(dup_ids.agg(SF.count("*").alias("n_dup_dropped")))
+            .crossJoin(kept.filter(is_test).agg(SF.count("*").alias("n_test_held_out")))
+            .crossJoin(contam.agg(SF.count("*").alias("n_contam_dropped")))
+            .crossJoin(qdrop_df)
+            .crossJoin(ddrop_df)
+            .crossJoin(saturation)
+            .crossJoin(resid)
+        )
+        _put(stats, z["stats"], batch_id)
+
+    return _zone_stream(
+        stream, checkpoint_dir, body,
+        meta=(base_dir, meta, _PREP_REBUILD_HINT, list(z.values())),
+        compact_every=compact_every, compactions=compactions,
     )
 
 
@@ -2047,20 +1936,9 @@ def _read_validated_zone(
     zone with no marker, a wrong kind, or a bumped format version raises
     with the family's rebuild hint — rows written under a different
     quantizer must never be returned."""
-    meta = read_zone_meta(spark, zone_dir)
+    meta = _checked_zone_meta(spark, zone_dir, rebuild_hint, kind=kind)
     if meta is None:
-        if _zone_has_data(spark, zone_dir):
-            raise ValueError(
-                f"stored zone {zone_dir} has data but no {ZONE_META_FILE} — "
-                f"unversioned stored state. {rebuild_hint}"
-            )
         return None, None
-    if meta.get("kind") != kind or meta.get("format_version") != 1:
-        raise ValueError(
-            f"stored zone {zone_dir} was written under {meta.get('kind')!r} "
-            f"format_version={meta.get('format_version')!r}; this reader "
-            f"expects {kind} v1. {rebuild_hint}"
-        )
     rows = read_incremental_zone(spark, zone_dir, before_batch, table_prefix)
     return rows, meta[payload_key]
 
@@ -2134,55 +2012,35 @@ def streaming_ivf(
     n_empty_lists — the retrain trigger: imbalance rising means the
     incoming distribution wandered from the frozen centroids). Returns
     the StreamingQuery handle; caller stops it."""
-    import hashlib
-
     from pyspark.sql import functions as SF
 
+    from ctcityscraper_spark.operators.artifacts import persist_tracked
     from ctcityscraper_spark.operators.similarity import assign_ivf_lists
 
     n_lists = len(centroids)
     dims = len(centroids[0]) if centroids else 0
     ctrs = [[float(x) for x in c] for c in centroids]
-    meta = _ivf_zone_meta(n_lists, dims, ctrs)
-    tbl_prefix = compact_table_prefix or (
-        "ivf_rows_" + hashlib.md5(index_dir.encode()).hexdigest()[:8]
-    )
+    tbl_prefix = _table_prefix(compact_table_prefix, "ivf_rows", index_dir)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        ensure_zone_meta(spark, index_dir, meta, _IVF_REBUILD_HINT)
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            epochs = _compacted_epochs(spark, index_dir)
-            # <=: finish pending cleanup on replay (see bloom sink)
-            if not epochs or epochs[-1][0] <= batch_id:
-                compact_incremental_zone(
-                    spark, index_dir, batch_id, table_prefix=tbl_prefix,
-                    bucket_keys=["list_id"], buckets=compact_buckets,
-                    sort=["list_id"],
-                )
-        assigned = assign_ivf_lists(
-            batch_df, ctrs, vec=vec, id_col=id_col
-        ).persist()
-        try:
-            assigned.write.mode("overwrite").parquet(
-                f"{index_dir}/batch_id={batch_id}"
+    def body(spark: SparkSession, batch_df: DataFrame, batch_id: int) -> None:
+        assigned = persist_tracked(
+            assign_ivf_lists(batch_df, ctrs, vec=vec, id_col=id_col)
+        )
+        _put(assigned, index_dir, batch_id)
+        if stats_dir is not None:
+            _put(
+                assigned.groupBy("list_id").agg(SF.count("*").alias("n")),
+                stats_dir, batch_id,
             )
-            if stats_dir is not None:
-                assigned.groupBy("list_id").agg(
-                    SF.count("*").alias("n")
-                ).write.mode("overwrite").parquet(
-                    f"{stats_dir}/batch_id={batch_id}"
-                )
-        finally:
-            assigned.unpersist()
 
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _zone_stream(
+        stream, checkpoint_dir, body,
+        meta=(index_dir, _ivf_zone_meta(n_lists, dims, ctrs), _IVF_REBUILD_HINT),
+        compact_every=compact_every,
+        compactions=[(index_dir, dict(
+            table_prefix=tbl_prefix, bucket_keys=["list_id"],
+            buckets=compact_buckets, sort=["list_id"],
+        ))],
     )
 
 
@@ -2295,31 +2153,18 @@ def streaming_pq(
     )
 
     cb = [[[float(x) for x in ctr] for ctr in sub] for sub in codebook]
-    meta = _pq_zone_meta(cb)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        ensure_zone_meta(spark, codes_dir, meta, _PQ_REBUILD_HINT)
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            epochs = _compacted_epochs(spark, codes_dir)
-            # <=: finish pending cleanup on replay (see bloom sink)
-            if not epochs or epochs[-1][0] <= batch_id:
-                compact_incremental_zone(spark, codes_dir, batch_id)
-        pq_encode_corpus(batch_df, cb, vec=vec, id_col=id_col).write.mode(
-            "overwrite"
-        ).parquet(f"{codes_dir}/batch_id={batch_id}")
+    def body(spark: SparkSession, batch_df: DataFrame, batch_id: int) -> None:
+        _put(pq_encode_corpus(batch_df, cb, vec=vec, id_col=id_col),
+             codes_dir, batch_id)
         if stats_dir is not None:
-            pq_recon_stats(batch_df, cb, vec=vec, id_col=id_col).write.mode(
-                "overwrite"
-            ).parquet(f"{stats_dir}/batch_id={batch_id}")
+            _put(pq_recon_stats(batch_df, cb, vec=vec, id_col=id_col),
+                 stats_dir, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _zone_stream(
+        stream, checkpoint_dir, body,
+        meta=(codes_dir, _pq_zone_meta(cb), _PQ_REBUILD_HINT),
+        compact_every=compact_every, compactions=[(codes_dir, {})],
     )
 
 
@@ -2422,30 +2267,16 @@ def streaming_kmeans_state(
     )
 
     ctrs = [[int(x) for x in c] for c in centroids]
-    meta = _kmeans_zone_meta(ctrs)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        ensure_zone_meta(spark, state_dir, meta, _KMEANS_REBUILD_HINT)
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            epochs = _compacted_epochs(spark, state_dir)
-            # <=: finish pending cleanup on replay (see bloom sink)
-            if not epochs or epochs[-1][0] <= batch_id:
-                compact_incremental_zone(
-                    spark, state_dir, batch_id,
-                    transform=sum_kmeans_state,
-                )
-        kmeans_partial_state(
-            batch_df, ctrs, vec=vec, id_col=id_col
-        ).write.mode("overwrite").parquet(f"{state_dir}/batch_id={batch_id}")
+    def body(spark: SparkSession, batch_df: DataFrame, batch_id: int) -> None:
+        _put(kmeans_partial_state(batch_df, ctrs, vec=vec, id_col=id_col),
+             state_dir, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _zone_stream(
+        stream, checkpoint_dir, body,
+        meta=(state_dir, _kmeans_zone_meta(ctrs), _KMEANS_REBUILD_HINT),
+        compact_every=compact_every,
+        compactions=[(state_dir, dict(transform=sum_kmeans_state))],
     )
 
 
@@ -2527,29 +2358,14 @@ def streaming_word_freqs(
     Returns the StreamingQuery handle; caller stops it."""
     from ctcityscraper_spark.operators.bpe import bpe_word_freqs, sum_word_freqs
 
-    meta = _word_freqs_zone_meta(text)
+    def body(spark: SparkSession, batch_df: DataFrame, batch_id: int) -> None:
+        _put(bpe_word_freqs(batch_df, text), freqs_dir, batch_id)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        ensure_zone_meta(spark, freqs_dir, meta, _WORD_FREQS_REBUILD_HINT)
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            epochs = _compacted_epochs(spark, freqs_dir)
-            # <=: finish pending cleanup on replay (see bloom sink)
-            if not epochs or epochs[-1][0] <= batch_id:
-                compact_incremental_zone(
-                    spark, freqs_dir, batch_id, transform=sum_word_freqs,
-                )
-        bpe_word_freqs(batch_df, text).write.mode("overwrite").parquet(
-            f"{freqs_dir}/batch_id={batch_id}"
-        )
-
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _zone_stream(
+        stream, checkpoint_dir, body,
+        meta=(freqs_dir, _word_freqs_zone_meta(text), _WORD_FREQS_REBUILD_HINT),
+        compact_every=compact_every,
+        compactions=[(freqs_dir, dict(transform=sum_word_freqs))],
     )
 
 
@@ -2574,28 +2390,16 @@ def read_cc_assignments(
     IS ``connected_components`` over every pair ingested in those
     batches, exactly (pinned in tests). ``(None, None)`` when nothing
     exists yet; marker validation as in the other stored zones."""
-    meta = read_zone_meta(spark, state_dir)
-    if meta is None:
-        if _zone_has_data(spark, state_dir):
-            raise ValueError(
-                f"stored zone {state_dir} has data but no {ZONE_META_FILE} "
-                f"— unversioned stored state. {_CC_REBUILD_HINT}"
-            )
-        return None, None
-    if meta.get("kind") != "cc_assignments" or meta.get("format_version") != 1:
-        raise ValueError(
-            f"stored zone {state_dir} was written under "
-            f"{meta.get('kind')!r} format_version="
-            f"{meta.get('format_version')!r}; this reader expects "
-            f"cc_assignments v1. {_CC_REBUILD_HINT}"
-        )
     from ctcityscraper_spark.operators.graph import latest_components
 
+    meta = _checked_zone_meta(
+        spark, state_dir, _CC_REBUILD_HINT, kind="cc_assignments"
+    )
+    if meta is None:
+        return None, None
     merged = _layered_keyed_read(
         spark, state_dir, "node", latest_components, before_batch
     )
-    if merged is None:
-        return None, meta
     return merged, meta
 
 
@@ -2633,44 +2437,22 @@ def streaming_components(
     from ctcityscraper_spark.operators.graph import (
         incremental_components,
         latest_components,
-        persistent_rdd_ids,
-        unpersist_rdd_ids,
     )
 
-    meta = _cc_zone_meta()
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        ensure_zone_meta(spark, state_dir, meta, _CC_REBUILD_HINT)
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            epochs = _compacted_epochs(spark, state_dir)
-            # <=: finish pending cleanup on replay (see bloom sink)
-            if not epochs or epochs[-1][0] <= batch_id:
-                compact_incremental_zone(
-                    spark, state_dir, batch_id,
-                    transform=latest_components,
-                )
-        ids0 = persistent_rdd_ids(spark)
-        assignments, _ = read_cc_assignments(
-            spark, state_dir, before_batch=batch_id
-        )
+    def body(spark: SparkSession, batch_df: DataFrame, batch_id: int) -> None:
+        # the runner frees every checkpoint the fixpoint creates once the
+        # write has materialized the delta
+        assignments, _ = read_cc_assignments(spark, state_dir, before_batch=batch_id)
         delta = incremental_components(
             assignments, batch_df, src, dst, changed_only=True
         ).withColumn("epoch", F.lit(batch_id).cast("long"))
-        delta.write.mode("overwrite").parquet(
-            f"{state_dir}/batch_id={batch_id}"
-        )
-        # the write materialized the delta; every checkpoint the fixpoint
-        # created this batch is now dead weight
-        unpersist_rdd_ids(spark, persistent_rdd_ids(spark) - ids0)
+        _put(delta, state_dir, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _zone_stream(
+        stream, checkpoint_dir, body,
+        meta=(state_dir, _cc_zone_meta(), _CC_REBUILD_HINT),
+        compact_every=compact_every,
+        compactions=[(state_dir, dict(transform=latest_components))],
     )
 
 
@@ -2710,29 +2492,16 @@ def read_drop_list(
     strictly before ``before_batch`` — the actionable dedup artifact
     over everything ingested, equal to a fresh cascade->CC->keep-best
     run (pinned in tests). ``(None, None)`` when nothing exists yet."""
-    meta = read_zone_meta(spark, base_dir)
     drops_dir = f"{base_dir}/drops"
+    meta = _checked_zone_meta(
+        spark, base_dir, _DROP_LIST_REBUILD_HINT, kind="dedup_drop_list",
+        data_dirs=[drops_dir, f"{base_dir}/assignments"],
+    )
     if meta is None:
-        if _zone_has_data(spark, drops_dir) or _zone_has_data(
-            spark, f"{base_dir}/assignments"
-        ):
-            raise ValueError(
-                f"stored zone {base_dir} has data but no {ZONE_META_FILE} "
-                f"— unversioned stored state. {_DROP_LIST_REBUILD_HINT}"
-            )
         return None, None
-    if meta.get("kind") != "dedup_drop_list" or meta.get("format_version") != 1:
-        raise ValueError(
-            f"stored zone {base_dir} was written under "
-            f"{meta.get('kind')!r} format_version="
-            f"{meta.get('format_version')!r}; this reader expects "
-            f"dedup_drop_list v1. {_DROP_LIST_REBUILD_HINT}"
-        )
     merged = _layered_keyed_read(
         spark, drops_dir, "drop_id", latest_drops, before_batch
     )
-    if merged is None:
-        return None, meta
     return merged, meta
 
 
@@ -2772,34 +2541,14 @@ def streaming_drop_list(
     from ctcityscraper_spark.operators.graph import (
         incremental_components,
         latest_components,
-        persistent_rdd_ids,
-        unpersist_rdd_ids,
     )
 
-    meta = _drop_list_zone_meta(quality_sql)
     z = {n: f"{base_dir}/{n}" for n in ("assignments", "drops")}
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        ensure_zone_meta(
-            spark, base_dir, meta, _DROP_LIST_REBUILD_HINT,
-            data_dirs=list(z.values()),
-        )
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            plans = [
-                ("assignments", latest_components),
-                ("drops", latest_drops),
-            ]
-            for zone, transform in plans:
-                epochs = _compacted_epochs(spark, z[zone])
-                # <=: finish pending cleanup on replay (see bloom sink)
-                if not epochs or epochs[-1][0] <= batch_id:
-                    compact_incremental_zone(
-                        spark, z[zone], batch_id, transform=transform,
-                    )
-        ids0 = persistent_rdd_ids(spark)
+    def body(spark: SparkSession, batch_df: DataFrame, batch_id: int) -> None:
+        # both writes materialize everything derived this batch before the
+        # runner frees the fixpoint's and this checkpoint's blocks
+        epoch = F.lit(batch_id).cast("long")
         assignments = _layered_keyed_read(
             spark, z["assignments"], "node", latest_components, batch_id
         )
@@ -2807,28 +2556,26 @@ def streaming_drop_list(
             assignments, batch_df, src, dst, flag_col="_chg"
         ).localCheckpoint(eager=True)
         changed = full.filter(F.col("_chg")).select("node", "component")
-        changed.withColumn(
-            "epoch", F.lit(batch_id).cast("long")
-        ).write.mode("overwrite").parquet(
-            f"{z['assignments']}/batch_id={batch_id}"
-        )
+        _put(changed.withColumn("epoch", epoch), z["assignments"], batch_id)
         affected = changed.select("component").distinct()
         members = full.select("node", "component").join(
             affected, "component", "left_semi"
         )
-        keep_best_representative(
-            docs, members, F.expr(quality_sql)
-        ).withColumn("epoch", F.lit(batch_id).cast("long")).write.mode(
-            "overwrite"
-        ).parquet(f"{z['drops']}/batch_id={batch_id}")
-        # both writes materialized everything derived this batch
-        unpersist_rdd_ids(spark, persistent_rdd_ids(spark) - ids0)
+        _put(
+            keep_best_representative(docs, members, F.expr(quality_sql))
+            .withColumn("epoch", epoch),
+            z["drops"], batch_id,
+        )
 
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _zone_stream(
+        stream, checkpoint_dir, body,
+        meta=(base_dir, _drop_list_zone_meta(quality_sql),
+              _DROP_LIST_REBUILD_HINT, list(z.values())),
+        compact_every=compact_every,
+        compactions=[
+            (z["assignments"], dict(transform=latest_components)),
+            (z["drops"], dict(transform=latest_drops)),
+        ],
     )
 
 
@@ -2905,30 +2652,20 @@ def streaming_dsir(
         "n_buckets": int(n_buckets), "seed": seed, "ngram": int(ngram),
         "text": text, "id_col": id_col, "target_sql": target_sql,
     }
-    meta = _dsir_zone_meta(config)
+    def body(spark: SparkSession, batch_df: DataFrame, batch_id: int) -> None:
+        _put(
+            dsir_bucket_model(
+                batch_df, SF.expr(target_sql), n_buckets=n_buckets,
+                text=text, id_col=id_col, seed=seed, ngram=ngram,
+            ),
+            model_dir, batch_id,
+        )
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        ensure_zone_meta(spark, model_dir, meta, _DSIR_REBUILD_HINT)
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            epochs = _compacted_epochs(spark, model_dir)
-            # <=: finish pending cleanup on replay (see bloom sink)
-            if not epochs or epochs[-1][0] <= batch_id:
-                compact_incremental_zone(
-                    spark, model_dir, batch_id, transform=sum_dsir_models,
-                )
-        dsir_bucket_model(
-            batch_df, SF.expr(target_sql), n_buckets=n_buckets,
-            text=text, id_col=id_col, seed=seed, ngram=ngram,
-        ).write.mode("overwrite").parquet(f"{model_dir}/batch_id={batch_id}")
-
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _zone_stream(
+        stream, checkpoint_dir, body,
+        meta=(model_dir, _dsir_zone_meta(config), _DSIR_REBUILD_HINT),
+        compact_every=compact_every,
+        compactions=[(model_dir, dict(transform=sum_dsir_models))],
     )
 
 
@@ -2960,22 +2697,13 @@ def read_bm25_index(
     kind, or drifted layout parameters raises with the rebuild hint —
     postings bucketed under a different ``n_term_buckets`` must never
     serve a probe that folds buckets under the current one."""
-    meta = read_zone_meta(spark, index_dir)
     zones = [f"{index_dir}/{n}" for n in ("postings", "term_stats", "totals")]
+    meta = _checked_zone_meta(
+        spark, index_dir, _BM25_INDEX_REBUILD_HINT, kind="bm25_index",
+        data_dirs=zones,
+    )
     if meta is None:
-        if any(_zone_has_data(spark, zdir) for zdir in zones):
-            raise ValueError(
-                f"stored zone {index_dir} has data but no {ZONE_META_FILE} "
-                f"— unversioned stored state. {_BM25_INDEX_REBUILD_HINT}"
-            )
         return None, None, None, None
-    if meta.get("kind") != "bm25_index" or meta.get("format_version") != 1:
-        raise ValueError(
-            f"stored zone {index_dir} was written under "
-            f"{meta.get('kind')!r} format_version="
-            f"{meta.get('format_version')!r}; this reader expects "
-            f"bm25_index v1. {_BM25_INDEX_REBUILD_HINT}"
-        )
     frames = [
         read_incremental_zone(spark, zdir, before_batch) for zdir in zones
     ]
@@ -3045,44 +2773,25 @@ def streaming_bm25_index(
     )
 
     nb = int(n_term_buckets or BM25_TERM_BUCKETS)
-    meta = _bm25_index_zone_meta(nb, text, id_col)
     z = {n: f"{index_dir}/{n}" for n in ("postings", "term_stats", "totals")}
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        ensure_zone_meta(
-            spark, index_dir, meta, _BM25_INDEX_REBUILD_HINT,
-            data_dirs=list(z.values()),
-        )
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            plans = [
-                ("postings", dict(partition_by=["term_bucket"])),
-                ("term_stats", dict(transform=sum_bm25_term_stats)),
-                ("totals", dict(transform=sum_bm25_totals)),
-            ]
-            for zone, kw in plans:
-                epochs = _compacted_epochs(spark, z[zone])
-                # <=: finish pending cleanup on replay (see bloom sink)
-                if not epochs or epochs[-1][0] <= batch_id:
-                    compact_incremental_zone(spark, z[zone], batch_id, **kw)
+    def body(spark: SparkSession, batch_df: DataFrame, batch_id: int) -> None:
         postings, term_stats, totals = bm25_index_delta(
             batch_df, text=text, id_col=id_col
         )
-        bm25_bucket_postings(postings, nb).write.partitionBy(
-            "term_bucket"
-        ).mode("overwrite").parquet(f"{z['postings']}/batch_id={batch_id}")
-        term_stats.write.mode("overwrite").parquet(
-            f"{z['term_stats']}/batch_id={batch_id}"
-        )
-        totals.write.mode("overwrite").parquet(
-            f"{z['totals']}/batch_id={batch_id}"
-        )
+        _put(bm25_bucket_postings(postings, nb), z["postings"], batch_id,
+             partition_by=["term_bucket"])
+        _put(term_stats, z["term_stats"], batch_id)
+        _put(totals, z["totals"], batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _zone_stream(
+        stream, checkpoint_dir, body,
+        meta=(index_dir, _bm25_index_zone_meta(nb, text, id_col),
+              _BM25_INDEX_REBUILD_HINT, list(z.values())),
+        compact_every=compact_every,
+        compactions=[
+            (z["postings"], dict(partition_by=["term_bucket"])),
+            (z["term_stats"], dict(transform=sum_bm25_term_stats)),
+            (z["totals"], dict(transform=sum_bm25_totals)),
+        ],
     )

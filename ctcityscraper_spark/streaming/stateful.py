@@ -118,57 +118,3 @@ def streaming_sessionize(stream: DataFrame, key: str = "user_id") -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-
-# -- transformWithState (Spark 4 stateful API) -------------------------------
-#
-# The successor to applyInPandasWithState: named state variables, timers and
-# TTL on a RocksDB-backed store. The change filter is re-expressed on it so
-# either API serves the same contract; new state machines should start here.
-
-
-def streaming_change_filter_tws(stream: DataFrame, key: str = "uuid") -> DataFrame:
-    """streaming_change_filter on transformWithStateInPandas.
-
-    Same semantics as streaming_change_filter: per-entity last-hash state,
-    emit only version boundaries. Requires the RocksDB state store provider
-    (set spark.sql.streaming.stateStore.providerClass to
-    RocksDBStateStoreProvider); HDFS-backed stores don't support
-    transformWithState. Spark's TWS Python driver worker also needs a
-    working google.protobuf install (absent in some minimal containers —
-    the pytest twin skips there; use streaming_change_filter in that case).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class ChangeFilter(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("last", _STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            (uuid,) = key
-            last_hash, version = (
-                self._state.get() if self._state.exists() else (None, 0)
-            )
-            out = []
-            whole = _collect_sorted(rows, "scraped_at")
-            if len(whole):
-                for h in whole["row_hash"]:
-                    if h != last_hash:
-                        version += 1
-                        last_hash = h
-                        out.append((uuid, h, version))
-            self._state.update((last_hash, version))
-            if out:
-                yield pd.DataFrame(out, columns=["uuid", "row_hash", "version"])
-
-        def close(self) -> None:
-            pass
-
-    return stream.groupBy(key).transformWithStateInPandas(
-        ChangeFilter(),
-        outputStructType=CHANGES_SCHEMA,
-        outputMode="Append",
-        timeMode="None",
-    )

@@ -63,6 +63,31 @@ def spark():
     yield s
 
 
+def _run_with_oracle(q, spark, data_dir, con):
+    """``(spark_pdf, oracle_pdf)`` for one catalog query. The two engines
+    overlap: both release the GIL (Spark in the JVM, DuckDB in its own
+    thread pool), so a test costs the slower side, not the sum; the shared
+    connection serves one statement at a time (only this test's). A query
+    whose oracle replays a sidecar the Spark side WRITES during this very
+    run (``read_json(`` in the oracle) keeps the load-bearing
+    Spark-then-oracle order."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    if "read_json(" in q.oracle:
+        spark_pdf = q.fn(spark, data_dir).toPandas()
+        return spark_pdf, con.execute(q.oracle).df()
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        f_spark = pool.submit(lambda: q.fn(spark, data_dir).toPandas())
+        f_oracle = pool.submit(lambda: con.execute(q.oracle).df())
+        return f_spark.result(), f_oracle.result()
+
+
+@pytest.fixture(scope="session")
+def run_with_oracle():
+    """The one place the oracle modules decide Spark/DuckDB run order."""
+    return _run_with_oracle
+
+
 @pytest.fixture()
 def tmp_store(spark, tmp_path):
     from ctcityscraper_spark.sources.store import ParquetStore

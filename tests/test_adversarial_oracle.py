@@ -285,23 +285,12 @@ def _targets() -> list[str]:
 
 
 @pytest.mark.parametrize("name", _targets())
-def test_adversarial_matches_oracle(spark, adv_dir, adv_duck, name):
-    from concurrent.futures import ThreadPoolExecutor
-
-    q = QUERIES[name]
-    # both engines overlapped, as in test_queries_oracle (r16): same
-    # computations, same assertions, wall = max of the two sides —
-    # except sidecar-replaying queries (read_json in the oracle), whose
-    # spark-then-oracle order is load-bearing
-    if "read_json(" in q.oracle:
-        spark_pdf = q.fn(spark, adv_dir).toPandas()
-        oracle_pdf = adv_duck.execute(q.oracle).df()
-    else:
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_spark = pool.submit(lambda: q.fn(spark, adv_dir).toPandas())
-            f_oracle = pool.submit(lambda: adv_duck.execute(q.oracle).df())
-            spark_pdf = f_spark.result()
-            oracle_pdf = f_oracle.result()
+def test_adversarial_matches_oracle(
+    spark, adv_dir, adv_duck, run_with_oracle, name
+):
+    spark_pdf, oracle_pdf = run_with_oracle(
+        QUERIES[name], spark, adv_dir, adv_duck
+    )
     report = compare_frames(spark_pdf, oracle_pdf)
     assert report["row_count_match"], report
     assert report["schema_match"], report

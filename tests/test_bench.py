@@ -448,3 +448,39 @@ class TestPrimaryLineBudget:
         if len(json.dumps(out)) > PRIMARY_LINE_BUDGET:
             for k in ("errors", "comparable_subtotal", "anomalous"):
                 assert k not in out
+
+
+class TestSplitStreamSource:
+    def _docs(self, spark, tmp_path, ids):
+        spark.createDataFrame(
+            [(i, f"doc {i}", "en", "s", 5) for i in ids],
+            "doc_id long, text string, lang string, source string, "
+            "n_chars long",
+        ).write.parquet(str(tmp_path / "documents.parquet"))
+        return str(tmp_path)
+
+    def test_every_part_gets_rows(self, spark, tmp_path):
+        import glob
+
+        from bench import _split_stream_source
+
+        sf_dir = self._docs(spark, tmp_path, range(9))
+        _split_stream_source(spark, sf_dir, str(tmp_path / "src"))
+        counts = [
+            spark.read.parquet(p).count()
+            for p in sorted(glob.glob(str(tmp_path / "src" / "b*")))
+        ]
+        assert counts == [3, 3, 3]
+
+    def test_empty_input_and_empty_part_raise(self, spark, tmp_path):
+        import pytest
+
+        from bench import _split_stream_source
+
+        sf_dir = self._docs(spark, tmp_path, [1, 2, 100])
+        with pytest.raises(ValueError, match=r"parts \[1\] of 3 empty"):
+            _split_stream_source(spark, sf_dir, str(tmp_path / "src"))
+        with pytest.raises(ValueError, match="no documents"):
+            _split_stream_source(
+                spark, sf_dir, str(tmp_path / "src"), modulus=1000
+            )

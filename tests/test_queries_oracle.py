@@ -25,28 +25,11 @@ def duck(spark):
 
 
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
-def test_query_matches_oracle(spark, duck, name):
-    from concurrent.futures import ThreadPoolExecutor
-
-    q = QUERIES[name]
-    # overlap the two engines (r16): both sides release the GIL (Spark in
-    # the JVM, DuckDB in its own thread pool), and several oracles —
-    # text_bpe_retrain_cycle's recursive-CTE twin is ~60 s at sf0.001 —
-    # cost far more than their Spark side, so running them serially
-    # priced the SUM per test. Same computations, same assertions; the
-    # shared connection serves one statement at a time (only this test's).
-    # EXCEPT sidecar-replaying queries (oracle reads a JSON the Spark
-    # side WRITES during this very run — read_json in the oracle): those
-    # keep the load-bearing spark-then-oracle order.
-    if "read_json(" in q.oracle:
-        spark_pdf = q.fn(spark, SF_DIR).toPandas()
-        oracle_pdf = duck.execute(q.oracle).df()
-    else:
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_spark = pool.submit(lambda: q.fn(spark, SF_DIR).toPandas())
-            f_oracle = pool.submit(lambda: duck.execute(q.oracle).df())
-            spark_pdf = f_spark.result()
-            oracle_pdf = f_oracle.result()
+def test_query_matches_oracle(spark, duck, run_with_oracle, name):
+    # engines overlapped: several oracles — text_bpe_retrain_cycle's
+    # recursive-CTE twin is ~60 s at sf0.001 — cost far more than their
+    # Spark side, so running them serially priced the SUM per test
+    spark_pdf, oracle_pdf = run_with_oracle(QUERIES[name], spark, SF_DIR, duck)
     report = compare_frames(spark_pdf, oracle_pdf)
     assert report["row_count_match"], report
     assert report["schema_match"], report

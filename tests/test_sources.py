@@ -1393,21 +1393,35 @@ class TestZoneFormatMeta:
 
 
 class TestStreamingDriverState:
-    def test_no_cached_blocks_or_stale_tables_after_run(self, spark, tmp_path):
+    @pytest.mark.parametrize(
+        "sink, zone_args",
+        [
+            ("streaming_bloom_membership",
+             dict(words_dir="words", flags_dir="flags", m_bits=1024, k=3)),
+            ("streaming_incremental_spans",
+             dict(docs_dir="docs", index_dir="index", spans_dir="spans",
+                  width=8)),
+        ],
+        ids=["streaming_bloom_membership", "streaming_incremental_spans"],
+    )
+    def test_no_cached_blocks_or_stale_tables_after_run(
+        self, spark, tmp_path, sink, zone_args
+    ):
         """The streaming sinks must leave ZERO driver-lifetime cached
         state behind: epochs are _SUCCESS-gated files (never persisted
         frames, hence not operators.artifacts-registered — see
         compact_incremental_zone's driver-lifetime note), per-batch
-        persists are unpersisted in finally, and each compaction drops
-        the older epoch's catalog table — so a long-lived streaming
-        driver holds at most one table registration per zone and no
-        storage blocks."""
+        persists (the sink's own and the operators' persist_tracked
+        artifacts, e.g. duplicate_substring_spans' window index) are
+        released at batch end, and each compaction drops the older
+        epoch's catalog table — so a long-lived streaming driver holds
+        at most one table registration per zone, no storage blocks and
+        no unreleased artifacts."""
         import time as _time
 
-        from ctcityscraper_spark.streaming.events import (
-            stream_from_directory,
-            streaming_bloom_membership,
-        )
+        from ctcityscraper_spark.operators import artifacts
+        from ctcityscraper_spark.streaming import events
+        from ctcityscraper_spark.streaming.events import stream_from_directory
 
         def storage_ids():
             return {
@@ -1416,6 +1430,7 @@ class TestStreamingDriverState:
             }
 
         before = storage_ids()
+        tracked_before = artifacts.tracked_count()
         schema = "doc_id long, text string"
         src = tmp_path / "incoming"
         batches = [[(i, f"driver state doc {i}")] for i in range(5)]
@@ -1425,24 +1440,25 @@ class TestStreamingDriverState:
             ).parquet(str(src))
             _time.sleep(1.1)
         try:
-            q = streaming_bloom_membership(
+            q = getattr(events, sink)(
                 stream_from_directory(
                     spark, str(src),
                     spark.createDataFrame(batches[0], schema).schema,
                     max_files_per_trigger=1,
                 ),
-                words_dir=str(tmp_path / "words"),
-                flags_dir=str(tmp_path / "flags"),
                 checkpoint_dir=str(tmp_path / "ckpt"),
-                m_bits=1024,
-                k=3,
                 compact_every=2,
                 compact_buckets=2,
                 compact_table_prefix="t_drv_state",
+                **{
+                    k: str(tmp_path / v) if k.endswith("_dir") else v
+                    for k, v in zone_args.items()
+                },
             )
             q.awaitTermination(180)
-            # no cached blocks survive the run
+            # no cached blocks or unreleased artifacts survive the run
             assert storage_ids() - before == set()
+            assert artifacts.tracked_count() == tracked_before
             # exactly one zone table registration remains (the newest
             # epoch); the absorbed one was dropped at compaction time
             live = [

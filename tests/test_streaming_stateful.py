@@ -84,80 +84,3 @@ class TestStreamingSessionize:
         }
         assert got == {(7, 1): 2, (7, 2): 2}
 
-
-class TestTransformWithState:
-    def test_change_filter_tws_matches_legacy_api(self, spark, tmp_path):
-        """The Spark 4 transformWithStateInPandas twin must produce the
-        same version boundaries as the applyInPandasWithState operator,
-        with state carrying across micro-batches on a RocksDB store.
-
-        The TWS Python driver worker needs a working google.protobuf;
-        this container ships a broken one (and installs are disallowed),
-        so skip where the import fails — the operator itself is plain
-        public API and runs wherever protobuf is intact.
-        """
-        import datetime as dt
-
-        import pytest as _pytest
-
-        try:
-            from google.protobuf import descriptor  # noqa: F401
-        except ImportError:
-            _pytest.skip("google.protobuf unavailable in this container")
-
-        from ctcityscraper_spark.streaming.stateful import (
-            streaming_change_filter_tws,
-        )
-
-        src = tmp_path / "in"
-        src.mkdir()
-        schema = "uuid string, row_hash string, scraped_at timestamp"
-        d = lambda day: dt.datetime(2024, 1, day)  # noqa: E731
-        spark.createDataFrame(
-            [("u1", "h1", d(1)), ("u2", "h9", d(1))], schema
-        ).coalesce(1).write.mode("append").parquet(str(src))
-        spark.createDataFrame(
-            [("u1", "h1", d(2)), ("u1", "h2", d(3))], schema
-        ).coalesce(1).write.mode("append").parquet(str(src))
-
-        prev = spark.conf.get(
-            "spark.sql.streaming.stateStore.providerClass", None
-        )
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        try:
-            stream = stream_from_directory(
-                spark,
-                str(src),
-                spark.read.parquet(str(src)).schema,
-                max_files_per_trigger=1,
-            )
-            q = (
-                streaming_change_filter_tws(stream)
-                .writeStream.format("memory")
-                .queryName("changes_tws")
-                .outputMode("append")
-                .option("checkpointLocation", str(tmp_path / "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-            rows = {
-                (r.uuid, r.version): r.row_hash
-                for r in spark.sql("select * from changes_tws").collect()
-            }
-            assert rows == {
-                ("u1", 1): "h1",
-                ("u1", 2): "h2",
-                ("u2", 1): "h9",
-            }
-        finally:
-            if prev is None:
-                spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-            else:
-                spark.conf.set(
-                    "spark.sql.streaming.stateStore.providerClass", prev
-                )
