@@ -211,6 +211,7 @@ def _run(
             from concurrent.futures import ThreadPoolExecutor
 
             from pyspark.sql import functions as F
+            from pyspark.util import inheritable_thread_target
 
             write_files = 1 if flat_rows <= coalesce_max_rows else None
 
@@ -235,10 +236,15 @@ def _run(
             # cache into DISTINCT table directories — overlap them in a
             # small driver pool (guide §2.6) instead of paying one
             # job+commit round-trip per table serially; stats/bookkeeping
-            # mutate only on this thread, in a deterministic order
+            # mutate only on this thread, in a deterministic order; each
+            # write is wrapped here so it keeps the caller's job group
             items = list(source.table_schemas.items())
             with ThreadPoolExecutor(max_workers=min(4, len(items))) as tp:
-                table_results = list(tp.map(_write_table, items))
+                futs = [
+                    tp.submit(inheritable_thread_target(spark)(_write_table), it)
+                    for it in items
+                ]
+                table_results = [f.result() for f in futs]
             for table, (written, skipped) in table_results:
                 stats.rows_written += written
                 stats.rows_skipped += skipped

@@ -18,8 +18,15 @@ operator's signature or behavior:
 - :func:`scope` is a context manager that releases everything registered
   inside its block on exit — wrap one pipeline composition and its
   artifacts die with it.
+- :func:`release` frees one registered frame early, once the results
+  derived from it are materialized (e.g. each fixpoint round's labels).
 - :func:`release_all` frees every artifact registered so far in the
   session (e.g. between pipeline phases of a long-lived driver).
+
+Each artifact is freed by its own handle — the cached Dataset, or the RDD
+under the checkpoint's ``LogicalRDD`` leaf — never by diffing the
+SparkContext's persistent-RDD map, so frames the caller or another thread
+persisted meanwhile are never touched.
 
 Release semantics differ by artifact kind, and the distinction matters:
 
@@ -32,71 +39,61 @@ Release semantics differ by artifact kind, and the distinction matters:
   Release these only after the results derived from them are materialized
   (written, collected, or re-checkpointed).
 
-Single-driver-thread assumption, same as :func:`graph.persistent_rdd_ids`
-(true for this engine's call sites); concurrent sessions should not share
-a scope.
+The registry is shared by all driver threads: a scope owns whatever any
+thread registers while it is open (e.g. the legs of a driver thread pool
+started inside it).
 """
 
 from __future__ import annotations
 
+import threading
 import weakref
 from contextlib import contextmanager
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 
 
 @dataclass
 class _Artifact:
-    kind: str  # "persist" | "checkpoint"
-    # persist-backed: the Python DataFrame is held WEAKLY (the registry
-    # must not keep caller-dropped frames alive for the session) plus a
-    # strong reference to its small JVM handle, through which unpersist
-    # still works after the Python wrapper is garbage-collected
-    df_ref: object = None
-    jdf: object = None
-    spark: object = None  # checkpoint-backed: session + RDD ids
-    rdd_ids: set[int] = field(default_factory=set)
+    # the Python DataFrame is held WEAKLY (the registry must not keep
+    # caller-dropped frames alive for the session; release() finds the
+    # entry through it) plus a strong reference to the small JVM handle
+    # that frees the blocks — the cached Dataset, or the checkpoint's RDD —
+    # which still works after the Python wrapper is garbage-collected
+    df_ref: weakref.ref
+    handle: object
     released: bool = False
 
     def release(self) -> None:
-        if self.released:
-            return
-        if self.kind == "persist":
-            df = self.df_ref() if self.df_ref is not None else None
-            if df is not None:
-                df.unpersist()
-            elif self.jdf is not None:
-                self.jdf.unpersist(False)
-        elif self.kind == "checkpoint" and self.spark is not None:
-            from ctcityscraper_spark.operators.graph import unpersist_rdd_ids
-
-            unpersist_rdd_ids(self.spark, self.rdd_ids)
-        self.released = True
+        if not self.released:
+            self.handle.unpersist(False)
+            self.released = True
 
 
 _TRACKED: list[_Artifact] = []
 # open scope() start-indexes into _TRACKED; pruning is suspended while any
 # scope is active because scopes release-and-delete by index range
 _SCOPE_MARKS: list[int] = []
+_LOCK = threading.Lock()
 
 
-def _append(artifact: _Artifact) -> None:
+def _append(df: DataFrame, handle) -> None:
     """Register an artifact, opportunistically dropping already-released
     entries first so a long-lived session that never calls scope()/
-    release_all() doesn't accumulate dead entries (each holds a strong
-    DataFrame reference) for its whole lifetime. Pruning shifts list
-    indexes, so it is skipped while a scope() is open — scopes prune
-    their own range on exit anyway."""
-    if not _SCOPE_MARKS and any(a.released for a in _TRACKED):
-        _TRACKED[:] = [a for a in _TRACKED if not a.released]
-    _TRACKED.append(artifact)
+    release_all() doesn't accumulate dead entries for its whole
+    lifetime. Pruning shifts list indexes, so it is skipped while a
+    scope() is open — scopes prune their own range on exit anyway."""
+    with _LOCK:
+        if not _SCOPE_MARKS and any(a.released for a in _TRACKED):
+            _TRACKED[:] = [a for a in _TRACKED if not a.released]
+        _TRACKED.append(_Artifact(weakref.ref(df), handle))
 
 
 def _track_persist(df: DataFrame) -> DataFrame:
     """Register a persist-backed artifact (called by operators right after
     ``.persist()``); returns the frame unchanged."""
-    _append(_Artifact("persist", df_ref=weakref.ref(df), jdf=df._jdf))
+    _append(df, df._jdf)
     return df
 
 
@@ -127,22 +124,23 @@ def checkpoint_tracked(df: DataFrame) -> DataFrame:
     header's checkpoint semantics): executes HERE (eager), and released
     blocks cannot recompute — use only for frames that are cheap to hold
     and consumed before release."""
-    spark = df.sparkSession
-    from ctcityscraper_spark.operators.graph import persistent_rdd_ids
-
-    before = persistent_rdd_ids(spark)
     out = df.localCheckpoint(eager=True)
-    _track_checkpoint(spark, persistent_rdd_ids(spark) - before)
+    # DataFrame.unpersist cannot free a checkpoint (its blocks belong to
+    # an RDD in the SparkContext, not a CacheManager entry); the plan's
+    # LogicalRDD leaf holds exactly that RDD, and its unpersist frees them
+    _append(out, out._jdf.queryExecution().logical().rdd())
     return out
 
 
-def _track_checkpoint(spark, rdd_ids: set[int]) -> None:
-    """Register the RDD ids backing a ``localCheckpoint``.
-    ``DataFrame.unpersist`` cannot free these (they live in the
-    SparkContext persistent-RDD map, not the CacheManager), so release
-    goes through :func:`graph.unpersist_rdd_ids`."""
-    if rdd_ids:
-        _append(_Artifact("checkpoint", spark=spark, rdd_ids=set(rdd_ids)))
+def release(df: DataFrame) -> None:
+    """Free one registered frame now instead of at its scope's exit (a
+    no-op for an unregistered or already-released frame). Same semantics
+    as the module header's: a released checkpoint leaves every frame
+    still referencing it one-shot invalid."""
+    with _LOCK:
+        for a in _TRACKED:
+            if a.df_ref() is df:
+                a.release()
 
 
 def tracked_count(unreleased_only: bool = True) -> int:
@@ -156,9 +154,10 @@ def release_all() -> None:
     Persist-backed frames recompute from lineage afterwards (results stay
     correct); checkpoint-backed frames become one-shot invalid — only
     release after their derived results are materialized."""
-    for a in _TRACKED:
-        a.release()
-    _TRACKED.clear()
+    with _LOCK:
+        for a in _TRACKED:
+            a.release()
+        _TRACKED.clear()
 
 
 @contextmanager
@@ -173,12 +172,14 @@ def scope():
         # band/token/checkpoint blocks created above are now freed
 
     Scopes nest: an inner scope releases only its own artifacts."""
-    mark = len(_TRACKED)
-    _SCOPE_MARKS.append(mark)
+    with _LOCK:
+        mark = len(_TRACKED)
+        _SCOPE_MARKS.append(mark)
     try:
         yield
     finally:
-        _SCOPE_MARKS.pop()
-        for a in _TRACKED[mark:]:
-            a.release()
-        del _TRACKED[mark:]
+        with _LOCK:
+            _SCOPE_MARKS.pop()
+            for a in _TRACKED[mark:]:
+                a.release()
+            del _TRACKED[mark:]

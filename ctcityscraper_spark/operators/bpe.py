@@ -130,42 +130,40 @@ def bpe_train_from_freqs(
         StructType,
     )
 
-    from ctcityscraper_spark.operators.graph import (
-        persistent_rdd_ids,
-        unpersist_rdd_ids,
-    )
+    from ctcityscraper_spark.operators.artifacts import checkpoint_tracked, scope
 
     spark = freqs.sparkSession
-    ids0 = persistent_rdd_ids(spark)
-    vocab = (
-        freqs.select(bpe_wrap_col("word").alias("wrapped"), "freq")
-        .localCheckpoint(eager=True)
-    )
     merges: list[tuple] = []
-    for rank in range(1, n_merges + 1):
-        top = (
-            _pair_counts(vocab)
-            .orderBy(F.desc("cnt"), "pair_a", "pair_b")
-            .limit(1)
-            .collect()
+    # every intermediate checkpoint is dead once the merge list exists —
+    # the returned frame is driver-local rows
+    with scope():
+        vocab = checkpoint_tracked(
+            freqs.select(bpe_wrap_col("word").alias("wrapped"), "freq")
         )
-        if not top:
-            break
-        a, b, cnt = top[0].pair_a, top[0].pair_b, top[0].cnt
-        merges.append((rank, a, b, a + b, cnt))
-        vocab = vocab.withColumn(
-            "wrapped",
-            F.replace(
-                "wrapped", F.lit(f"({a})({b})"), F.lit(f"({a}{b})")
-            ),
-        )
-        if rank % checkpoint_every == 0 and rank < n_merges:
-            vocab = vocab.localCheckpoint(eager=True)
+        for rank in range(1, n_merges + 1):
+            top = (
+                _pair_counts(vocab)
+                .orderBy(F.desc("cnt"), "pair_a", "pair_b")
+                .limit(1)
+                .collect()
+            )
+            if not top:
+                break
+            a, b, cnt = top[0].pair_a, top[0].pair_b, top[0].cnt
+            merges.append((rank, a, b, a + b, cnt))
+            vocab = vocab.withColumn(
+                "wrapped",
+                F.replace(
+                    "wrapped", F.lit(f"({a})({b})"), F.lit(f"({a}{b})")
+                ),
+            )
+            if rank % checkpoint_every == 0 and rank < n_merges:
+                vocab = checkpoint_tracked(vocab)
     # Arrow-path local frame (functions/localdf.py): the plain-list form
     # cost ~1.4 s of Python-worker fan-out on the final materialization
     from ctcityscraper_spark.functions.localdf import local_rows_df
 
-    out = local_rows_df(
+    return local_rows_df(
         spark,
         merges,
         ["rank", "pair_a", "pair_b", "merged", "cnt"],
@@ -179,10 +177,6 @@ def bpe_train_from_freqs(
             ]
         ),
     )
-    # every intermediate checkpoint is dead once the merge list exists —
-    # the returned frame is driver-local rows
-    unpersist_rdd_ids(spark, persistent_rdd_ids(spark) - ids0)
-    return out
 
 
 def bpe_encode_col(word, merges: list) -> F.Column:

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, functions as F
 from ctcityscraper_spark.functions.exprs import bind_once
 from ctcityscraper_spark.functions.hashing import hash64
 from ctcityscraper_spark.functions.localdf import local_rows_df
+from ctcityscraper_spark.operators.artifacts import persist_tracked
 from ctcityscraper_spark.operators.dedup import doc_shingles
 from ctcityscraper_spark.operators.text import tokens_col
 
@@ -717,8 +718,6 @@ def duplicate_substring_spans(
     island merge shuffles once on (doc_a, doc_b, alignment), keys that are
     high-cardinality and skew-free by construction.
     """
-    from ctcityscraper_spark.operators.artifacts import persist_tracked
-
     if bucket_by_hash is None:
         n_windows = (
             df.select(
@@ -1065,8 +1064,9 @@ def token_budget_selection(
     # upstream plan and is consumed up to three times (the collect, the
     # full-bins filter, the straddling-bin window) — without this an
     # expensive upstream would execute once per consumer. persist (not
-    # localCheckpoint): evicted blocks recompute instead of failing.
-    toks = df.select(
+    # localCheckpoint): evicted or released blocks recompute instead of
+    # failing, so the returned plan stays valid.
+    toks = persist_tracked(df.select(
         F.col(id_col).alias("doc_id"),
         # regexp_count: same match count, no materialized token array
         F.regexp_count(text, F.lit(BPE_SPLIT_RE))
@@ -1074,12 +1074,7 @@ def token_budget_selection(
         .alias("n_tokens"),
         F.floor(quality_score_col(text) * bins).cast("int").alias("q_bin"),
         hash64(F.col(id_col), seed).alias("_h"),
-    ).filter(F.col("q_bin").isNotNull()).persist()
-    # registered for release (artifacts.scope()/release_all()): recomputes
-    # from lineage after release, so the returned plan stays valid
-    from ctcityscraper_spark.operators.artifacts import _track_persist
-
-    _track_persist(toks)
+    ).filter(F.col("q_bin").isNotNull()))
     bin_sums = {
         r["q_bin"]: r["s"]
         for r in toks.groupBy("q_bin").agg(F.sum("n_tokens").alias("s")).collect()
@@ -1219,14 +1214,11 @@ def global_quality_rank(
     # the collect below and the returned join/window consume it — without
     # this the whole upstream would execute twice (the exact issue
     # graph.connected_components fixes with its eager checkpoint).
-    # persist (not localCheckpoint): evicted blocks recompute from
-    # lineage instead of failing, the right degradation corpus-side.
-    binned = df.select(F.col(id_col), qd.alias("_q"), b.alias("_bin")).persist()
-    # registered for release (artifacts.scope()/release_all()): recomputes
-    # from lineage after release, so the returned plan stays valid
-    from ctcityscraper_spark.operators.artifacts import _track_persist
-
-    _track_persist(binned)
+    # persist (not localCheckpoint): evicted or released blocks recompute
+    # from lineage instead of failing, the right degradation corpus-side.
+    binned = persist_tracked(
+        df.select(F.col(id_col), qd.alias("_q"), b.alias("_bin"))
+    )
     counts = binned.groupBy("_bin").agg(F.count("*").alias("n")).collect()
     ordered = sorted(counts, key=lambda r: (r["_bin"] == -1, -r["_bin"]))
     offs: list[tuple[int, int]] = []
@@ -1294,10 +1286,7 @@ def curriculum_order(
 
     ranked = global_quality_rank(df, quality, id_col=id_col, deciles=stages)
     spark = df.sparkSession
-    staged = ranked.select(id_col, F.col("decile").alias("stage")).persist()
-    from ctcityscraper_spark.operators.artifacts import _track_persist
-
-    _track_persist(staged)
+    staged = persist_tracked(ranked.select(id_col, F.col("decile").alias("stage")))
     counts = staged.groupBy("stage").agg(F.count("*").alias("n")).collect()
     offs: list[tuple[int, int]] = []
     total = 0

@@ -1004,13 +1004,9 @@ def cascade_confirmed_pairs(
     """
     sh0 = doc_shingles(df, text, id_col, n)
     if materialize:
-        from ctcityscraper_spark.operators.artifacts import _track_checkpoint
-        from ctcityscraper_spark.operators.graph import persistent_rdd_ids
+        from ctcityscraper_spark.operators.artifacts import checkpoint_tracked
 
-        spark = df.sparkSession
-        before = persistent_rdd_ids(spark)
-        sh0 = sh0.localCheckpoint(eager=True)
-        _track_checkpoint(spark, persistent_rdd_ids(spark) - before)
+        sh0 = checkpoint_tracked(sh0)
     cand = _lsh_band_pairs(_minhash_sigs_from_shingles(sh0, k), k, bands)
     return _jaccard_verify_from_shingles(sh0, cand, threshold, df_cap)
 
@@ -1541,16 +1537,10 @@ def keep_best_representative(
     callers that KNOW clusters are small, e.g. tight per-batch loops;
     ``0`` forces the aggregate path, also probe-free.
     """
-    from ctcityscraper_spark.operators.artifacts import _track_checkpoint
-    from ctcityscraper_spark.operators.graph import persistent_rdd_ids
+    from ctcityscraper_spark.operators.artifacts import checkpoint_tracked
 
     q = docs.select(F.col(id_col).alias(node_col), quality.alias("_q"))
-    spark = components.sparkSession
-    before = persistent_rdd_ids(spark)
-    components = components.select(node_col, component_col).localCheckpoint(
-        eager=True
-    )
-    _track_checkpoint(spark, persistent_rdd_ids(spark) - before)
+    components = checkpoint_tracked(components.select(node_col, component_col))
     n_comp = components.count()  # free: materialized by the checkpoint
     comp_side = (
         F.broadcast(components)

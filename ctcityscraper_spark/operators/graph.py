@@ -16,26 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation, functions as F
 
-
-def persistent_rdd_ids(spark) -> set[int]:
-    """Ids of RDDs currently persisted in this SparkContext.
-
-    ``DataFrame.unpersist`` cannot free a ``localCheckpoint`` (checkpoints
-    are persisted RDDs, not CacheManager entries), so iterative operators
-    snapshot this set before creating checkpoints and free the difference
-    when done. Single-driver-thread assumption (true for this engine's
-    call sites); concurrent sessions should skip the cleanup.
-    """
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    return {int(i) for i in jmap.keySet().toArray()}
-
-
-def unpersist_rdd_ids(spark, ids: set[int]) -> None:
-    """Unpersist the given RDD ids (non-blocking); missing ids are ignored."""
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for i in jmap.keySet().toArray():
-        if int(i) in ids:
-            jmap.get(i).unpersist(False)
+from ctcityscraper_spark.operators import artifacts
 
 
 def _union_find_components(rows, src: str, dst: str) -> dict:
@@ -124,15 +105,13 @@ def connected_components(
     # it in their plans — without this checkpoint the upstream pipeline is
     # re-executed for each appearance in round 1 (measured 5x slower).
     spark = edges.sparkSession
-    ids_before = persistent_rdd_ids(spark)
     # NULL endpoints drop at entry: the distributed rounds lose them in
     # the label joins anyway (NULL never equi-joins), and the driver
     # union-find would otherwise treat None as a real node — the three
     # size-adaptive paths must agree row-for-row on any input
-    edges = (
+    edges = artifacts.checkpoint_tracked(
         edges.select(F.col(src).alias(src), F.col(dst).alias(dst))
         .filter(F.col(src).isNotNull() & F.col(dst).isNotNull())
-        .localCheckpoint(eager=True)
     )
     n_edges = edges.count()  # count is free: materialized
     if n_edges <= driver_max_edges:
@@ -161,8 +140,7 @@ def connected_components(
         out = local_rows_df(
             spark, sorted(comp.items()), ["node", "component"], schema
         )
-        created = persistent_rdd_ids(spark) - ids_before
-        unpersist_rdd_ids(spark, created)
+        artifacts.release(edges)
         return out
     small = n_edges <= broadcast_max_edges
     sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).unionByName(
@@ -202,30 +180,24 @@ def connected_components(
         # sum: overflow-safe at any id range), so each round is exactly
         # one action.
         obs = Observation()
-        new_labels = (
+        new_labels = artifacts.checkpoint_tracked(
             candidates.groupBy("node")
             .agg(F.min("component").alias("component"))
             .observe(obs, F.sum(F.col("component").cast("decimal(38,0)")).alias("s"))
-            .localCheckpoint(eager=True)
         )
+        # the previous round's labels are dead once this round is
+        # materialized — without this each invocation holds one persisted
+        # RDD per round until its scope ends
+        artifacts.release(labels)
         labels = new_labels
         new_sum = obs.get["s"]
         if new_sum == prev_sum:
             break
         prev_sum = new_sum
-    # Free every checkpoint this call created except the one backing the
-    # returned labels (RDD ids are monotonic, so that's the max). Without
-    # this each invocation leaks one persisted RDD per round — a
-    # long-lived session accumulates blocks and GC pressure. The survivor
-    # registers with operators.artifacts so a long-lived session can free
-    # it too (artifacts.scope()/release_all() — one-shot: release only
-    # after the derived results are materialized).
-    created = persistent_rdd_ids(spark) - ids_before
-    if created:
-        unpersist_rdd_ids(spark, created - {max(created)})
-        from ctcityscraper_spark.operators.artifacts import _track_checkpoint
-
-        _track_checkpoint(spark, {max(created)})
+    # only the checkpoint backing the returned labels survives; it stays
+    # registered, so artifacts.scope()/release_all() free it (one-shot:
+    # release only after the derived results are materialized)
+    artifacts.release(edges)
     return labels.select("node", "component")
 
 
@@ -293,12 +265,9 @@ def incremental_components(
     # often the output of an expensive candidate pipeline. Tracked via
     # operators.artifacts so long-lived sessions can free it after
     # materializing results.
-    spark = delta_edges.sparkSession
-    ids0 = persistent_rdd_ids(spark)
-    edges = (
+    edges = artifacts.checkpoint_tracked(
         delta_edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
         .filter(F.col("_s").isNotNull() & F.col("_d").isNotNull())
-        .localCheckpoint(eager=True)
     )
     # broadcast delta-sized frames only while they actually fit in one
     # executor (count is free — edges is materialized); above the
@@ -314,12 +283,9 @@ def incremental_components(
     # the ONLY stored rows the update needs: assignments of delta
     # endpoints that already exist. Broadcast semi-join = one map-side
     # scan of the corpus side, output bounded by 2|delta|.
-    touched = assignments.join(
-        bcast(delta_nodes), "node", "left_semi"
-    ).localCheckpoint(eager=True)
-    from ctcityscraper_spark.operators.artifacts import _track_checkpoint
-
-    _track_checkpoint(spark, persistent_rdd_ids(spark) - ids0)
+    touched = artifacts.checkpoint_tracked(
+        assignments.join(bcast(delta_nodes), "node", "left_semi")
+    )
     contracted = (
         edges.join(
             bcast(

@@ -1858,7 +1858,7 @@ def pca_rotated_ivf_topk(
     :func:`build_ivf_index`); the in-session persist is the
     single-job equivalent.
     """
-    from ctcityscraper_spark.operators.artifacts import _track_persist
+    from ctcityscraper_spark.operators.artifacts import persist_tracked
 
     pca_k = dims if pca_k is None else pca_k
     if components is not None:
@@ -1894,8 +1894,8 @@ def pca_rotated_ivf_topk(
             df, comps, vec=vec, id_col=id_col, out_col="__pemb"
         )
 
-    pc = _track_persist(_project(corpus).persist())
-    pq = _track_persist(_project(queries).persist())
+    pc = persist_tracked(_project(corpus))
+    pq = persist_tracked(_project(queries))
     ctrs = hash_pick_centroids(pc, n_lists, vec="__pemb", id_col=id_col)
     if not ctrs:
         raise ValueError(

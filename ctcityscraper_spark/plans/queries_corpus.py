@@ -2173,11 +2173,10 @@ def q_corpus_e2e_prep(spark, sf_dir):
     #      the test split that previously sat in the FINAL action waiting
     #      on the dsir_drop checkpoint it does not depend on).
     # Serial cost was the SUM of these round-trips; now it is the slowest
-    # one. Only thread A creates a tracked checkpoint, so the artifacts
-    # registry's id-diff can at worst absorb a concurrently-built cache
-    # RDD id (persist-backed = recomputable; see artifacts.py); the other
-    # legs register persist-backed artifacts only.
+    # one.
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
 
     from ctcityscraper_spark.operators.corpus import (
         dsir_bucket_model,
@@ -2241,15 +2240,18 @@ def q_corpus_e2e_prep(spark, sf_dir):
         return s
 
     with ThreadPoolExecutor(max_workers=5) as pool:
-        f_contam = pool.submit(_contam)
-        f_fit = pool.submit(_fit)
-        f_model = pool.submit(_model)
-        f_fpr = pool.submit(
+        # each leg keeps the caller's job group (wrapped HERE, on the
+        # submitting thread, with its own copy of the local properties)
+        submit = lambda fn: pool.submit(inheritable_thread_target(spark)(fn))
+        f_contam = submit(_contam)
+        f_fit = submit(_fit)
+        f_model = submit(_model)
+        f_fpr = submit(
             lambda: kept.agg(
                 F.count("*").alias("n"), F.sum("doc_id").alias("s")
             ).collect()[0]
         )
-        f_tkmv = pool.submit(_test_kmv)
+        f_tkmv = submit(_test_kmv)
         contam = f_contam.result()
         weights = f_fit.result()
         dsir_model = f_model.result()

@@ -29,6 +29,11 @@ from pyspark.sql import functions as F
 from ctcityscraper_spark.functions.hashing import hash64, row_hash_col
 from ctcityscraper_spark.functions.localdf import local_rows_df
 from ctcityscraper_spark.operators import scd2
+from ctcityscraper_spark.operators.artifacts import (
+    checkpoint_tracked,
+    persist_tracked,
+    release,
+)
 from ctcityscraper_spark.operators.dedup import (
     embedding_neardup_pairs,
     exact_duplicates,
@@ -64,13 +69,6 @@ from ctcityscraper_spark.operators.text import (
 from ctcityscraper_spark.plans.queries import query
 from ctcityscraper_spark.plans.tables import load_table, parallelize_scan
 
-
-def _persist(df):
-    """Alias of :func:`operators.artifacts.persist_tracked` — see there;
-    kept as the module-local spelling for the audit-query call sites."""
-    from ctcityscraper_spark.operators.artifacts import persist_tracked
-
-    return persist_tracked(df)
 
 EMB_DIMS = 64
 
@@ -407,7 +405,6 @@ def q_dedup_bloom_membership(spark, sf_dir):
     negatives (every is_dup row flags true) and false positives only at
     the designed fpp; the oracle also recomputes exact membership
     (is_dup) so the comparison pins both."""
-    from ctcityscraper_spark.operators.artifacts import persist_tracked
     from ctcityscraper_spark.operators.dedup import (
         bloom_might_contain,
         rebuild_bloom_from_fingerprints,
@@ -573,7 +570,6 @@ def q_dedup_bloom_chase(spark, sf_dir):
     them — a hash match proves the chase loses nothing (is_dup implies
     might_contain: no false negatives end-to-end, because chase and
     filter share one fingerprint definition)."""
-    from ctcityscraper_spark.operators.artifacts import persist_tracked
     from ctcityscraper_spark.operators.dedup import (
         bloom_chased_duplicates,
         rebuild_bloom_from_fingerprints,
@@ -1106,6 +1102,23 @@ def q_dedup_cascade(spark, sf_dir):
     )
 
 
+def _cascade_edges(docs):
+    """(shingle index, confirmed pairs) of the catalog cascade above, inline
+    so the caller holds the checkpointed index's handle and can release
+    it once the (lazy) pairs are materialized downstream."""
+    from ctcityscraper_spark.operators.dedup import (
+        _jaccard_verify_from_shingles,
+        _lsh_band_pairs,
+        _minhash_sigs_from_shingles,
+        doc_shingles,
+    )
+
+    sh0 = checkpoint_tracked(doc_shingles(docs, n=5))
+    cand = _lsh_band_pairs(_minhash_sigs_from_shingles(sh0, 16), 16, 8)
+    confirmed = _jaccard_verify_from_shingles(sh0, cand, 0.6, 1000)
+    return sh0, confirmed.select("doc_a", "doc_b")
+
+
 @query(
     "quality_filter_pipeline",
     oracle=f"""
@@ -1405,20 +1418,11 @@ def q_text_bpe_retrain_cycle(spark, sf_dir):
         bpe_word_freqs,
         sum_word_freqs,
     )
-    from ctcityscraper_spark.operators.graph import (
-        persistent_rdd_ids,
-        unpersist_rdd_ids,
-    )
 
     docs = parallelize_scan(load_table(spark, sf_dir, "documents"), spark)
     is_new = hash64(F.col("doc_id"), "bpecyc") % 5 == 0
-    ids0 = persistent_rdd_ids(spark)
-    freqs_old = bpe_word_freqs(docs.filter(~is_new)).localCheckpoint(eager=True)
-    old_ids = persistent_rdd_ids(spark) - ids0
-    freqs_new = bpe_word_freqs(docs.filter(is_new)).localCheckpoint(eager=True)
-    from ctcityscraper_spark.operators.artifacts import _track_checkpoint
-
-    _track_checkpoint(spark, persistent_rdd_ids(spark) - ids0 - old_ids)
+    freqs_old = checkpoint_tracked(bpe_word_freqs(docs.filter(~is_new)))
+    freqs_new = checkpoint_tracked(bpe_word_freqs(docs.filter(is_new)))
     stale = [tuple(r) for r in bpe_train_from_freqs(freqs_old, BPE_MERGES).collect()]
     retrained = [
         tuple(r)
@@ -1426,7 +1430,7 @@ def q_text_bpe_retrain_cycle(spark, sf_dir):
             sum_word_freqs(freqs_old.unionByName(freqs_new)), BPE_MERGES
         ).collect()
     ]
-    unpersist_rdd_ids(spark, old_ids)  # dead once both vocabs are trained
+    release(freqs_old)  # dead once both vocabs are trained
     before = bpe_fertility_from_freqs(freqs_new, stale).select(
         F.col("bpe_tokens").alias("stale_bpe_tokens"),
         "char_tokens",
@@ -1561,32 +1565,14 @@ def q_dedup_groups_connected(spark, sf_dir):
     iterative min-label propagation (operators/graph.py) — chains a~b~c
     merge into one group, which the pairwise drop rule can't do. Oracle is
     a recursive CTE computing the same min-reachable-id labels."""
-    from ctcityscraper_spark.operators.dedup import (
-        _jaccard_verify_from_shingles,
-        _lsh_band_pairs,
-        _minhash_sigs_from_shingles,
-        doc_shingles,
-    )
-    from ctcityscraper_spark.operators.graph import (
-        connected_components,
-        persistent_rdd_ids,
-        unpersist_rdd_ids,
-    )
+    from ctcityscraper_spark.operators.graph import connected_components
 
     docs = parallelize_scan(load_table(spark, sf_dir, "documents"), spark)
-    # Inline cascade with an explicit handle on the materialized shingle
-    # index: connected_components checkpoints the confirmed-pair edges
-    # eagerly, after which the index is dead weight — free its persisted
-    # RDD so repeated invocations don't accumulate cached blocks.
-    ids0 = persistent_rdd_ids(spark)
-    sh0 = doc_shingles(docs, n=5).localCheckpoint(eager=True)
-    sh0_ids = persistent_rdd_ids(spark) - ids0
-    cand = _lsh_band_pairs(_minhash_sigs_from_shingles(sh0, 16), 16, 8)
-    confirmed = _jaccard_verify_from_shingles(sh0, cand, 0.6, 1000).select(
-        "doc_a", "doc_b"
-    )
+    # connected_components checkpoints the confirmed-pair edges eagerly,
+    # after which the shingle index is dead weight
+    sh0, confirmed = _cascade_edges(docs)
     out = connected_components(confirmed).repartition(1).sortWithinPartitions("node")
-    unpersist_rdd_ids(spark, sh0_ids)
+    release(sh0)
     return out
 
 
@@ -1619,22 +1605,15 @@ def q_dedup_groups_incremental(spark, sf_dir):
     graph only (O(delta), never O(corpus)), and relabeling is one
     broadcast merge-map join. The oracle is a FRESH recursive-CTE CC
     over all pairs: incremental == fresh, hash-checked cross-engine."""
-    from ctcityscraper_spark.operators.dedup import cascade_confirmed_pairs
     from ctcityscraper_spark.operators.graph import (
         connected_components,
         incremental_components,
-        persistent_rdd_ids,
-        unpersist_rdd_ids,
     )
 
     docs = parallelize_scan(load_table(spark, sf_dir, "documents"), spark)
-    ids0 = persistent_rdd_ids(spark)
-    confirmed = (
-        cascade_confirmed_pairs(docs, k=16, bands=8, n=5, threshold=0.6)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
-    )
-    confirmed_ids = persistent_rdd_ids(spark) - ids0
+    sh0, pairs = _cascade_edges(docs)
+    confirmed = checkpoint_tracked(pairs)
+    release(sh0)
     new_a = hash64(F.col("doc_a"), "ccinc") % 5 == 0
     new_b = hash64(F.col("doc_b"), "ccinc") % 5 == 0
     assignments = connected_components(confirmed.filter(~new_a & ~new_b))
@@ -1643,7 +1622,7 @@ def q_dedup_groups_incremental(spark, sf_dir):
         .repartition(1)
         .sortWithinPartitions("node")
     )
-    unpersist_rdd_ids(spark, confirmed_ids)
+    release(confirmed)
     return out
 
 
@@ -1716,33 +1695,24 @@ def q_dedup_incremental_drop_list(spark, sf_dir):
     which is exactly the components holding changed assignment rows
     (every merge routes through a delta edge, and every delta edge
     touches a new doc)."""
-    from ctcityscraper_spark.operators.dedup import (
-        cascade_confirmed_pairs,
-        keep_best_representative,
-    )
+    from ctcityscraper_spark.operators.dedup import keep_best_representative
     from ctcityscraper_spark.operators.graph import (
         connected_components,
         incremental_components,
-        persistent_rdd_ids,
-        unpersist_rdd_ids,
     )
     from ctcityscraper_spark.operators.text import quality_score_col
 
     docs = parallelize_scan(load_table(spark, sf_dir, "documents"), spark)
-    ids0 = persistent_rdd_ids(spark)
-    confirmed = (
-        cascade_confirmed_pairs(docs, k=16, bands=8, n=5, threshold=0.6)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
-    )
-    confirmed_ids = persistent_rdd_ids(spark) - ids0
+    sh0, pairs = _cascade_edges(docs)
+    confirmed = checkpoint_tracked(pairs)
+    release(sh0)
     new_a = hash64(F.col("doc_a"), "dropinc") % 5 == 0
     new_b = hash64(F.col("doc_b"), "dropinc") % 5 == 0
     assignments = connected_components(confirmed.filter(~new_a & ~new_b))
     full = incremental_components(
         assignments, confirmed.filter(new_a | new_b)
     )
-    unpersist_rdd_ids(spark, confirmed_ids)
+    release(confirmed)
     affected = (
         full.filter(hash64(F.col("node"), "dropinc") % 5 == 0)
         .select("component")
@@ -2151,12 +2121,12 @@ def q_ann_ivf_recall(spark, sf_dir):
     emb = parallelize_scan(load_table(spark, sf_dir, "embeddings"), spark)
     qs = emb.filter(F.col("vec_id") < 10)
     ctrs = hash_pick_centroids(emb, 8)
-    approx = _persist(
+    approx = persist_tracked(
         ivf_flat_topk(emb, qs, ctrs, k=5, n_probe=2).select(
             "query_id", "neighbor_id"
         )
     )
-    exact = _persist(cosine_topk(emb, qs, k=5).select("query_id", "neighbor_id"))
+    exact = persist_tracked(cosine_topk(emb, qs, k=5).select("query_id", "neighbor_id"))
     hits = exact.join(approx, ["query_id", "neighbor_id"])
     return (
         exact.agg(F.count("*").alias("n_exact"))
@@ -2381,7 +2351,7 @@ def q_ann_pca_ivf_recall(spark, sf_dir):
     plain = ivf_flat_topk(
         emb, qs, hash_pick_centroids(emb, 8), k=5, n_probe=2
     ).select("query_id", "neighbor_id")
-    exact = _persist(cosine_topk(emb, qs, k=5).select("query_id", "neighbor_id"))
+    exact = persist_tracked(cosine_topk(emb, qs, k=5).select("query_id", "neighbor_id"))
     hits_pca = exact.join(approx, ["query_id", "neighbor_id"])
     hits_plain = exact.join(plain, ["query_id", "neighbor_id"])
     return (
@@ -2663,10 +2633,10 @@ def q_dedup_lsh_recall(spark, sf_dir):
     (k, bands, threshold). Both sides are inverted-index joins (never
     quadratic); recall/precision are single exact divisions of counts."""
     docs = parallelize_scan(load_table(spark, sf_dir, "documents"), spark)
-    truth = _persist(
+    truth = persist_tracked(
         ngram_jaccard_pairs(docs, n=5, threshold=0.6).select("doc_a", "doc_b")
     )
-    cand = _persist(minhash_lsh_pairs(docs, k=16, bands=8, n=5))
+    cand = persist_tracked(minhash_lsh_pairs(docs, k=16, bands=8, n=5))
     hits = truth.join(cand, ["doc_a", "doc_b"])
     return (
         truth.agg(F.count("*").alias("n_true"))
@@ -3022,6 +2992,8 @@ def q_ann_pq_retrain_cycle(spark, sf_dir):
     exact oracle) is pinned in tests/test_operators.py::TestPqRetrainCycle."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.util import inheritable_thread_target
+
     from ctcityscraper_spark.operators.similarity import (
         pq_recon_error_expr,
         pq_train_codebooks,
@@ -3051,11 +3023,11 @@ def q_ann_pq_retrain_cycle(spark, sf_dir):
     # cannot change any value). Serial cost was the sum of three
     # collect round-trips; now it is the slowest one.
     with ThreadPoolExecutor(max_workers=3) as pool:
-        f_old = pool.submit(pq_train_codebooks, base, EMB_DIMS)
-        f_new = pool.submit(
-            pq_train_codebooks, base.unionByName(delta), EMB_DIMS
-        )
-        f_fpr = pool.submit(
+        # each job keeps the caller's job group (wrapped on this thread)
+        submit = lambda fn, *a: pool.submit(inheritable_thread_target(spark)(fn), *a)
+        f_old = submit(pq_train_codebooks, base, EMB_DIMS)
+        f_new = submit(pq_train_codebooks, base.unionByName(delta), EMB_DIMS)
+        f_fpr = submit(
             lambda: v.agg(
                 F.count("*").alias("n"), F.sum("vec_id").alias("s")
             ).collect()[0]
@@ -3137,10 +3109,10 @@ def q_ann_pq_recall(spark, sf_dir):
     integers; recall is a single division."""
     emb = parallelize_scan(load_table(spark, sf_dir, "embeddings"), spark)
     qs = emb.filter(F.col("vec_id") < 10)
-    approx = _persist(
+    approx = persist_tracked(
         pq_adc_topk(emb, qs, EMB_DIMS, k=5).select("query_id", "neighbor_id")
     )
-    exact = _persist(cosine_topk(emb, qs, k=5).select("query_id", "neighbor_id"))
+    exact = persist_tracked(cosine_topk(emb, qs, k=5).select("query_id", "neighbor_id"))
     hits = exact.join(approx, ["query_id", "neighbor_id"])
     return (
         exact.agg(F.count("*").alias("n_exact"))
@@ -3287,31 +3259,15 @@ def q_dedup_keep_best(spark, sf_dir):
     cleanest copy of each near-duplicate set, not an arbitrary minimum id.
     Oracle recomputes the same clusters via the recursive min-label CTE and
     the same quality ranking."""
-    from ctcityscraper_spark.operators.dedup import (
-        _jaccard_verify_from_shingles,
-        _lsh_band_pairs,
-        _minhash_sigs_from_shingles,
-        doc_shingles,
-        keep_best_representative,
-    )
-    from ctcityscraper_spark.operators.graph import (
-        connected_components,
-        persistent_rdd_ids,
-        unpersist_rdd_ids,
-    )
+    from ctcityscraper_spark.operators.dedup import keep_best_representative
+    from ctcityscraper_spark.operators.graph import connected_components
     from ctcityscraper_spark.operators.text import quality_score_col
 
     docs = parallelize_scan(load_table(spark, sf_dir, "documents"), spark)
-    ids0 = persistent_rdd_ids(spark)
-    sh0 = doc_shingles(docs, n=5).localCheckpoint(eager=True)
-    sh0_ids = persistent_rdd_ids(spark) - ids0
-    cand = _lsh_band_pairs(_minhash_sigs_from_shingles(sh0, 16), 16, 8)
-    confirmed = _jaccard_verify_from_shingles(sh0, cand, 0.6, 1000).select(
-        "doc_a", "doc_b"
-    )
+    sh0, confirmed = _cascade_edges(docs)
     comp = connected_components(confirmed)
     out = keep_best_representative(docs, comp, quality_score_col("text"))
-    unpersist_rdd_ids(spark, sh0_ids)
+    release(sh0)
     return out.repartition(1).sortWithinPartitions("drop_id")
 
 
@@ -3539,7 +3495,7 @@ def q_ann_kmeans_update(spark, sf_dir):
     ctr = kmeans_fit_micros(base, _KM_K, iters=_KM_ITERS)
     # consumed twice (population readout + the update step): persist, or
     # the second action re-runs both corpus-assignment passes
-    merged = _persist(
+    merged = persist_tracked(
         merge_kmeans_states(
             kmeans_partial_state(base, ctr), kmeans_partial_state(delta, ctr)
         )

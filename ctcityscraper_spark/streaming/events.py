@@ -170,17 +170,10 @@ def _zone_stream(
     ``meta`` is :func:`ensure_zone_meta`'s positional tail ``(base,
     expected, rebuild_hint[, data_dirs])``; ``compactions`` lists
     ``(zone_dir, compact_incremental_zone kwargs)`` pairs compacted at
-    every ``compact_every`` boundary before the body runs. Persistent
-    RDDs that appear during the body (untracked checkpoints such as the
-    components fixpoint's) are freed after it, on the single-driver-thread
-    assumption of :func:`graph.persistent_rdd_ids`: materialize
-    caller-owned caches before the stream starts. Returns the
-    StreamingQuery handle."""
+    every ``compact_every`` boundary before the body runs. Every cached
+    frame or checkpoint the body registers with ``operators.artifacts``
+    is freed when it ends. Returns the StreamingQuery handle."""
     from ctcityscraper_spark.operators import artifacts
-    from ctcityscraper_spark.operators.graph import (
-        persistent_rdd_ids,
-        unpersist_rdd_ids,
-    )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -191,12 +184,8 @@ def _zone_stream(
         if compact_every and batch_id > 0 and batch_id % compact_every == 0:
             for zone_dir, kw in compactions:
                 compact_incremental_zone(spark, zone_dir, batch_id, **kw)
-        rdd_ids = persistent_rdd_ids(spark)
-        try:
-            with artifacts.scope():
-                body(spark, batch_df, batch_id)
-        finally:
-            unpersist_rdd_ids(spark, persistent_rdd_ids(spark) - rdd_ids)
+        with artifacts.scope():
+            body(spark, batch_df, batch_id)
 
     return (
         stream.writeStream.foreachBatch(sink)
@@ -323,13 +312,11 @@ def read_zone_meta(spark: SparkSession, base: str) -> dict | None:
         return None
     stream = fs.open(p)
     try:
-        data = bytearray()
-        while True:
-            b = stream.read()
-            if b < 0:
-                break
-            data.append(b)
-        return json.loads(bytes(data).decode("utf-8"))
+        # one py4j round trip (commons-io ships in Spark's jars), not one
+        # per byte — this runs on every micro-batch of every sink
+        return json.loads(
+            spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+        )
     finally:
         stream.close()
 
@@ -1841,15 +1828,22 @@ def streaming_corpus_prep(
 
         from concurrent.futures import ThreadPoolExecutor
 
+        from pyspark.util import inheritable_thread_target
+
         with ThreadPoolExecutor(max_workers=4) as pool:
+            # each write joins the batch's job group (wrapped on this
+            # thread), so query.stop() also cancels writes in flight
+            submit = lambda fn, *a: pool.submit(
+                inheritable_thread_target(spark)(fn), *a
+            )
             futs = [
-                pool.submit(_packs_then_cursor),
-                pool.submit(_put, seg_delta, z["seg_counts"], batch_id),
-                pool.submit(_put, bloom_delta, z["bloom_words"], batch_id),
-                pool.submit(_put, fp_delta, z["fingerprints"], batch_id),
-                pool.submit(_put, batch_test_sh, z["test_shingles"], batch_id),
-                pool.submit(_put, train_kmv_delta, z["train_kmv"], batch_id),
-                pool.submit(_put, test_kmv_delta, z["test_kmv"], batch_id),
+                submit(_packs_then_cursor),
+                submit(_put, seg_delta, z["seg_counts"], batch_id),
+                submit(_put, bloom_delta, z["bloom_words"], batch_id),
+                submit(_put, fp_delta, z["fingerprints"], batch_id),
+                submit(_put, batch_test_sh, z["test_shingles"], batch_id),
+                submit(_put, train_kmv_delta, z["train_kmv"], batch_id),
+                submit(_put, test_kmv_delta, z["test_kmv"], batch_id),
             ]
             for fut in futs:
                 fut.result()
@@ -2537,6 +2531,7 @@ def streaming_drop_list(
     ``_zone_meta`` as a SQL string, so a resumed stream under a
     different ranking refuses (drop rows elected under different
     quality must never merge). Returns the StreamingQuery handle."""
+    from ctcityscraper_spark.operators.artifacts import checkpoint_tracked
     from ctcityscraper_spark.operators.dedup import keep_best_representative
     from ctcityscraper_spark.operators.graph import (
         incremental_components,
@@ -2552,9 +2547,11 @@ def streaming_drop_list(
         assignments = _layered_keyed_read(
             spark, z["assignments"], "node", latest_components, batch_id
         )
-        full = incremental_components(
-            assignments, batch_df, src, dst, flag_col="_chg"
-        ).localCheckpoint(eager=True)
+        full = checkpoint_tracked(
+            incremental_components(
+                assignments, batch_df, src, dst, flag_col="_chg"
+            )
+        )
         changed = full.filter(F.col("_chg")).select("node", "component")
         _put(changed.withColumn("epoch", epoch), z["assignments"], batch_id)
         affected = changed.select("component").distinct()

@@ -15,6 +15,10 @@ os.environ["PYTHONPATH"] = os.pathsep.join(
     [_TESTS_DIR, _REPO_DIR, os.environ.get("PYTHONPATH", "")]
 )
 sys.path.insert(0, _TESTS_DIR)
+# The session's default 48g driver heap lets the JVM grow past a small
+# box's RAM until the OOM killer takes it mid-suite; cap it unless the
+# environment says otherwise (read once, when the first JVM starts).
+os.environ.setdefault("SPARK_DRIVER_MEMORY", "6g")
 
 
 # --- the `fast` tier (r15 VERDICT item 1) ---------------------------------
@@ -86,6 +90,19 @@ def _run_with_oracle(q, spark, data_dir, con):
 def run_with_oracle():
     """The one place the oracle modules decide Spark/DuckDB run order."""
     return _run_with_oracle
+
+
+def _persistent_rdd_ids(spark) -> set[int]:
+    """Ids of every RDD persisted in the SparkContext — cached frames and
+    checkpoints alike, whoever created them."""
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    return {int(i) for i in jmap.keySet().toArray()}
+
+
+@pytest.fixture(scope="session")
+def persistent_rdd_ids():
+    """Leak probe: diff it around a run to find blocks left persisted."""
+    return _persistent_rdd_ids
 
 
 @pytest.fixture()

@@ -10,6 +10,8 @@ enforceable. Release semantics under test:
   from lineage (correctness preserved after release).
 - checkpoint-backed artifacts: blocks freed; the frame is one-shot
   (documented), so results must be materialized before release.
+- every artifact is freed by its own handle: frames persisted outside the
+  registry (by the caller or another thread) are never touched.
 """
 
 from __future__ import annotations
@@ -171,6 +173,44 @@ class TestRegistryHygiene:
         )
         artifacts.release_all()
 
+    def test_concurrent_registration_loses_no_entry(self):
+        """Registrations from more threads than cores, each pruning the
+        released entries first, must not drop one another's entries."""
+        import sys
+        import threading
+
+        class _Frame:
+            pass
+
+        class _Handle:
+            def unpersist(self, blocking):
+                pass
+
+        artifacts.release_all()
+        kept: list = []
+
+        def register():
+            for _ in range(150):
+                f, dead = _Frame(), _Frame()
+                kept.append(f)
+                artifacts._append(f, _Handle())
+                artifacts._append(dead, _Handle())
+                artifacts.release(dead)
+
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            threads = [threading.Thread(target=register) for _ in range(8)]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(60)
+        finally:
+            sys.setswitchinterval(interval)
+        assert not any(t.is_alive() for t in threads)
+        assert artifacts.tracked_count() == len(kept) == 8 * 150
+        artifacts.release_all()
+
     def test_release_works_after_caller_drops_frame(self, spark):
         """The registry holds the Python DataFrame weakly; release must
         still free the cached blocks through the JVM handle after the
@@ -190,4 +230,63 @@ class TestRegistryHygiene:
         del out, docs
         gc.collect()
         artifacts.release_all()
+        assert not (_storage_rdd_ids(spark) - before_ids)
+
+
+class TestHandleRelease:
+    @staticmethod
+    def _checkpoint_rdd_id(df) -> int:
+        return df._jdf.queryExecution().logical().rdd().id()
+
+    def test_threaded_checkpoints_free_only_their_own(self, spark):
+        """Four checkpoints made at once from a thread pool inside one
+        scope, while another thread raw-persists and materializes a frame:
+        the scope frees exactly the four checkpoints."""
+        import threading
+        from concurrent.futures import ThreadPoolExecutor
+
+        before_ids = _storage_rdd_ids(spark)
+        raw = spark.range(57).selectExpr("id * 13 AS raw_w").persist()
+        cacher = threading.Thread(target=raw.count)
+        with artifacts.scope():
+            cacher.start()
+            with ThreadPoolExecutor(max_workers=4) as pool:
+                ckpts = list(pool.map(
+                    lambda i: artifacts.checkpoint_tracked(
+                        spark.range(10 + i).selectExpr(f"id + {i} AS v")
+                    ),
+                    range(4),
+                ))
+            cacher.join(120)
+            assert not cacher.is_alive()
+            ckpt_ids = {self._checkpoint_rdd_id(c) for c in ckpts}
+            assert len(ckpt_ids) == 4
+            held = _storage_rdd_ids(spark) - before_ids
+            assert ckpt_ids < held and len(held) == 5
+        # the raw-persisted frame is still cached, and only it
+        assert _storage_rdd_ids(spark) - before_ids == held - ckpt_ids
+        raw.unpersist(blocking=True)
+        assert not (_storage_rdd_ids(spark) - before_ids)
+
+    def test_release_frees_exactly_one_frame(self, spark):
+        before_ids = _storage_rdd_ids(spark)
+        with artifacts.scope():
+            a = artifacts.checkpoint_tracked(spark.range(23).selectExpr("id AS a"))
+            b = artifacts.persist_tracked(spark.range(31).selectExpr("id * 17 AS b"))
+            b.count()
+            c = artifacts.checkpoint_tracked(spark.range(41).selectExpr("id AS c"))
+            held = _storage_rdd_ids(spark) - before_ids
+            assert len(held) == 3
+            artifacts.release(a)
+            assert held - (_storage_rdd_ids(spark) - before_ids) == {
+                self._checkpoint_rdd_id(a)
+            }
+            artifacts.release(b)
+            assert _storage_rdd_ids(spark) - before_ids == {
+                self._checkpoint_rdd_id(c)
+            }
+            # an unregistered frame, or a second release, is a no-op
+            artifacts.release(spark.range(3))
+            artifacts.release(a)
+            assert c.count() == 41
         assert not (_storage_rdd_ids(spark) - before_ids)

@@ -308,6 +308,23 @@ class TestDistributedFlatten:
         assert stats.rows_written == 0
         assert stats.rows_skipped == 9
 
+    def test_pooled_table_writes_keep_callers_job_group(self, spark, tmp_store):
+        """The per-table writes run on a driver thread pool; each must join
+        the caller's job group (so cancelling the group cancels them)."""
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+        ungrouped0 = set(tracker.getJobIdsForGroup(None))
+        sc.setJobGroup("pooled-writes", "run_load under a caller's group")
+        try:
+            stats = run_load(spark, tmp_store, make_source(table_schemas=self.SCHEMAS),
+                             ResolvedParams("newhaven", entry_ids=[1, 2, 3]),
+                             retry_delay=0, compact_after=False)
+        finally:
+            sc._jsc.clearJobGroup()
+        assert stats.rows_written == 9
+        assert tracker.getJobIdsForGroup("pooled-writes")
+        assert set(tracker.getJobIdsForGroup(None)) - ungrouped0 == set()
+
 
 class TestSnapshotsAndHooks:
     def test_materialized_current_matches_window_view(self, spark, tmp_store):

@@ -4019,9 +4019,8 @@ class TestBpeTrainer:
         # bb->2 toks => 4 bpe / 8 chars / 3 words; doc1: 1/1/1
         assert got == {0: (4, 8, 3), 1: (1, 1, 1)}
 
-    def test_no_leaked_checkpoints(self, spark):
+    def test_no_leaked_checkpoints(self, spark, persistent_rdd_ids):
         from ctcityscraper_spark.operators.bpe import bpe_train
-        from ctcityscraper_spark.operators.graph import persistent_rdd_ids
 
         ids0 = persistent_rdd_ids(spark)
         bpe_train(self._docs(spark, ["abc abc xyz"]), 3, checkpoint_every=1).collect()

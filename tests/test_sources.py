@@ -2890,11 +2890,10 @@ class TestStreamingComponents:
             ).parquet(str(src))
             _time.sleep(1.1)
 
-    def test_streamed_assignment_equals_fresh_cc(self, spark, tmp_path):
-        from ctcityscraper_spark.operators.graph import (
-            connected_components,
-            persistent_rdd_ids,
-        )
+    def test_streamed_assignment_equals_fresh_cc(
+        self, spark, tmp_path, persistent_rdd_ids
+    ):
+        from ctcityscraper_spark.operators.graph import connected_components
         from ctcityscraper_spark.streaming.events import (
             read_cc_assignments,
             stream_from_directory,
@@ -3091,7 +3090,14 @@ class TestStreamingDropList:
         (10, "never-in-any-pair"),
     ]
 
-    def test_streamed_drops_equal_fresh(self, spark, tmp_path):
+    @pytest.mark.parametrize("caller_cached", [False, True],
+                             ids=["plain", "caller_cached"])
+    def test_streamed_drops_equal_fresh(
+        self, spark, tmp_path, persistent_rdd_ids, caller_cached
+    ):
+        """``caller_cached``: the caller persists ``docs`` but does not
+        materialize it; the stream must free only its own blocks, so the
+        caller's cache survives the run until the caller unpersists it."""
         import time as _time
 
         import pytest as _pytest
@@ -3101,10 +3107,7 @@ class TestStreamingDropList:
         from ctcityscraper_spark.operators.dedup import (
             keep_best_representative,
         )
-        from ctcityscraper_spark.operators.graph import (
-            connected_components,
-            persistent_rdd_ids,
-        )
+        from ctcityscraper_spark.operators.graph import connected_components
         from ctcityscraper_spark.streaming.events import (
             read_drop_list,
             stream_from_directory,
@@ -3112,6 +3115,8 @@ class TestStreamingDropList:
         )
 
         docs = spark.createDataFrame(self.DOCS, "doc_id long, text string")
+        if caller_cached:
+            docs = docs.persist()
         src = tmp_path / "incoming"
         for rows in self.BATCHES:
             spark.createDataFrame(rows, self.SCHEMA).coalesce(1).write.mode(
@@ -3136,6 +3141,9 @@ class TestStreamingDropList:
 
         ids0 = persistent_rdd_ids(spark)
         run()
+        if caller_cached:
+            assert len(persistent_rdd_ids(spark) - ids0) == 1
+            docs.unpersist(blocking=True)
         assert persistent_rdd_ids(spark) - ids0 == set()
         merged, meta = read_drop_list(spark, str(tmp_path / "dl"))
         assert meta["config"]["quality_sql"] == "length(text) / 1000.0"
