@@ -70,7 +70,10 @@ def history(
     their raw version index — parity with the reference SQL).
     """
     if entity is not None:
-        df = df.filter(F.col(key) == entity)  # pushdown happens before window
+        # pushdown happens before the window; one entity's rows are few, so
+        # a single partition serves both the window and the final sort with
+        # one exchange instead of a hash exchange plus a sampled range sort
+        df = df.filter(F.col(key) == entity).repartition(1)
     out = with_version_columns(df, key, order)
     return out.filter(
         (F.col("row_hash") != F.col("prev_hash")) | F.col("prev_hash").isNull()
@@ -114,7 +117,8 @@ def register_scd2_views(
     key: str = "uuid",
     order: str = "scraped_at",
 ) -> None:
-    """Expose raw + the three SCD2 views as SQL temp views.
+    """Expose the raw table and the current and history views as SQL temp
+    views (``{name}_raw``, ``{name}_current``, ``{name}_history``).
 
     ``spark.sql(f"SELECT * FROM {name}_current")`` etc. — the SQL-text path
     the reference offers via DuckDB comes for free from Catalyst.

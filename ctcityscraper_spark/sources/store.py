@@ -6,8 +6,13 @@ ZSTD-compressed, schema drift tolerated across files within a table
 (union-by-name semantics, database.py:275).
 
 Scale notes:
-- Scans are plain ``spark.read.parquet`` on the table directory — column
-  pruning and predicate pushdown reach the parquet reader via Catalyst.
+- Scans are ``spark.read.parquet`` on the table directory — column pruning
+  and predicate pushdown reach the parquet reader via Catalyst. Each store
+  keeps the schema a read inferred, keyed by (path, merge_schema,
+  tolerate_corrupt), with the listing (path, size, mtime) of the data files
+  it was inferred from; while the listing is unchanged a read passes that
+  schema and runs no inference job. Store files are write-once, so every
+  append, compaction, rehash or snapshot swap changes the listing.
 - ``existing_hashes`` / ``known_entry_ids`` return DataFrames (distributed),
   not driver-side sets — the reference's in-memory hash set
   (database.py:86-106) becomes a left-anti join at any scale.
@@ -19,11 +24,13 @@ Scale notes:
 
 from __future__ import annotations
 
+import os
 import shutil
 import uuid as _uuid
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from ctcityscraper_spark.functions.hashing import stamp_metadata
 
@@ -34,6 +41,8 @@ class ParquetStore:
         self.data_dir = Path(data_dir)
         self.scope_key = scope_key
         self.scope_dir = self.data_dir / scope_key
+        # (path, merge_schema, tolerate_corrupt) -> (file listing, schema)
+        self._schemas: dict[tuple[str, bool, bool], tuple[tuple, StructType]] = {}
 
     # ------------------------------------------------------------------ paths
     def table_path(self, table: str) -> Path:
@@ -76,13 +85,36 @@ class ParquetStore:
         option is per-DataFrameReader, so it never leaks into other
         reads the way the session-wide
         ``spark.sql.files.ignoreCorruptFiles`` conf would.
+
+        The inferred schema is reused while the table's data files are
+        unchanged (same paths, sizes and mtimes), separately for each
+        (``merge_schema``, ``tolerate_corrupt``) pair, so a repeated scan of
+        an unchanged table starts no Spark job.
         """
+        return self._read(self.table_path(table), merge_schema, tolerate_corrupt)
+
+    def _read(self, path: Path, merge_schema: bool, tolerate_corrupt: bool) -> DataFrame:
+        """``spark.read.parquet(path)``, passing the schema inferred by an
+        earlier read while the listing of ``path``'s data files is unchanged.
+
+        The listing is taken before the read, so a file landing during a
+        missed read leaves a listing that no longer matches and the next read
+        infers again; a kept schema is never paired with files it was not
+        inferred from.
+        """
+        key = (str(path), merge_schema, tolerate_corrupt)
+        files = _data_files(path)
         reader = self.spark.read
         if merge_schema:
             reader = reader.option("mergeSchema", "true")
         if tolerate_corrupt:
             reader = reader.option("ignoreCorruptFiles", "true")
-        return reader.parquet(str(self.table_path(table)))
+        kept = self._schemas.get(key)
+        if kept is not None and kept[0] == files:
+            return reader.schema(kept[1]).parquet(str(path))
+        df = reader.parquet(str(path))
+        self._schemas[key] = (files, df.schema)
+        return df
 
     def existing_hashes(self, table: str) -> DataFrame:
         """DISTINCT row_hash — the refresh-dedup state (reference P1/J2).
@@ -181,12 +213,18 @@ class ParquetStore:
         snapshot directly with zero shuffle. Semantics identical to
         operators.scd2.current by construction. Atomic swap; returns rows.
         """
+        from pyspark.sql import Observation
+        from pyspark.sql import functions as F
+
         from ctcityscraper_spark.operators.scd2 import current
 
-        snap = current(self.scan(table), key=key, order=order)
+        obs = Observation()
+        snap = current(self.scan(table), key=key, order=order).observe(
+            obs, F.count(F.lit(1)).alias("n")
+        )
         tmp = self.snapshot_path(table).parent / f"_tmp_{table}_{_uuid.uuid4().hex[:8]}"
         snap.write.mode("overwrite").option("compression", "zstd").parquet(str(tmp))
-        n = self.spark.read.parquet(str(tmp)).count()
+        n = obs.get["n"]
         dest = self.snapshot_path(table)
         if dest.exists():
             shutil.rmtree(dest)
@@ -197,13 +235,17 @@ class ParquetStore:
     def current_snapshot(self, table: str) -> DataFrame:
         """Read the materialized latest-state snapshot (no window, no
         shuffle). Raises if never materialized — callers fall back to
-        operators.scd2.current over ``scan``."""
+        operators.scd2.current over ``scan``.
+
+        Like ``scan``, reuses the schema kept for the snapshot directory
+        while its files are unchanged; every ``materialize_current`` writes
+        new files, so the first read after it infers again."""
         dest = self.snapshot_path(table)
         if not dest.exists():
             raise FileNotFoundError(
                 f"no current-snapshot for {table!r}; call materialize_current"
             )
-        return self.spark.read.parquet(str(dest))
+        return self._read(dest, merge_schema=False, tolerate_corrupt=False)
 
     # ------------------------------------------------------------- migration
     def rehash_table(self, table: str, extra_exclude: set[str] | None = None) -> int:
@@ -290,3 +332,17 @@ class ParquetStore:
             Path(f).unlink()
         shutil.rmtree(tmp)
         return moved
+
+
+def _data_files(path: Path) -> tuple[tuple[str, int, int], ...]:
+    """(path, size, mtime_ns) of every file a Parquet read of ``path`` sees:
+    recursively, skipping names that start with ``_`` or ``.`` as Spark's
+    file index does (``_SUCCESS``, ``.crc`` sidecars, hidden tmp dirs)."""
+    out = []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for name in names:
+            if not name.startswith(("_", ".")):
+                st = os.stat(os.path.join(root, name))
+                out.append((os.path.join(root, name), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))

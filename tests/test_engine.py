@@ -336,6 +336,8 @@ class TestSnapshotsAndHooks:
         snap = tmp_store.current_snapshot("properties")
         view = current(tmp_store.scan("properties"))
         assert sorted(r.uuid for r in snap.collect()) == sorted(r.uuid for r in view.collect())
+        n = tmp_store.materialize_current("properties", key="uuid")
+        assert n == tmp_store.current_snapshot("properties").count() == view.count()
 
     def test_post_refresh_hook_sees_changes(self, spark, tmp_store):
         seen = {}

@@ -44,6 +44,7 @@ class TestPushdownAndPruning:
         tmp_store.write_batch("t", df, scraped_at=dt.datetime(2024, 1, 1))
         plan = history(tmp_store.scan("t"), "u1")._jdf.queryExecution().executedPlan().toString()
         assert "EqualTo(uuid,u1)" in plan
+        assert "rangepartitioning" not in plan
 
 
 class TestJoinStrategies:

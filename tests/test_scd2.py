@@ -7,6 +7,7 @@ the reference's literal SQL over the same parquet files.
 """
 
 import datetime as dt
+from pathlib import Path
 
 import duckdb
 import pytest
@@ -288,3 +289,117 @@ class TestCorruptFileTolerance:
 
         with pytest.raises(Exception):
             tmp_store.scan("properties").collect()
+
+
+def _sorted_rows(df):
+    cols = sorted(df.columns)
+    return sorted((tuple(r) for r in df.select(*cols).collect()), key=repr)
+
+
+class TestScanSchemaReuse:
+    """``scan`` / ``current_snapshot`` reuse the inferred schema only while
+    the table's data files are unchanged."""
+
+    def test_warm_scan_starts_no_job(self, spark, tmp_store):
+        from ctcityscraper_spark.sources.store import ParquetStore
+
+        write_versions(
+            tmp_store,
+            [
+                (T0, [{"uuid": "u1", "pid": 1, "v": 1.0}]),
+                (T0 + dt.timedelta(days=1), [{"uuid": "u2", "pid": 2, "v": 2.0}]),
+            ],
+        )
+        tmp_store.scan("properties")
+        sc = spark.sparkContext
+
+        def jobs_of_scan(store, group):
+            sc.setJobGroup(group, "scan only")
+            try:
+                store.scan("properties")
+            finally:
+                sc._jsc.clearJobGroup()
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            return list(sc.statusTracker().getJobIdsForGroup(group))
+
+        # control: a store without a kept schema infers it with a job
+        cold = ParquetStore(spark, tmp_store.data_dir, tmp_store.scope_key)
+        assert jobs_of_scan(cold, "scan-reuse-cold")
+        assert jobs_of_scan(tmp_store, "scan-reuse-warm") == []
+        assert tmp_store.scan("properties").count() == 2
+
+    def test_new_column_after_warm_scan(self, spark, tmp_store):
+        write_versions(tmp_store, [(T0, [{"uuid": "u1", "pid": 1, "v": 1.0}])])
+        assert "extra" not in tmp_store.scan("properties").columns
+        write_versions(
+            tmp_store,
+            [(T0 + dt.timedelta(days=1), [{"uuid": "u2", "pid": 2, "v": 2.0, "extra": "x"}])],
+        )
+        got = tmp_store.scan("properties")
+        assert {r.uuid: r.extra for r in got.collect()} == {"u1": None, "u2": "x"}
+        fresh = spark.read.option("mergeSchema", "true").parquet(
+            str(tmp_store.table_path("properties"))
+        )
+        assert got.schema == fresh.schema
+        assert _sorted_rows(got) == _sorted_rows(fresh)
+
+    def test_compaction_and_unlink_seen(self, tmp_store):
+        write_versions(
+            tmp_store,
+            [(T0 + dt.timedelta(days=i), [{"uuid": f"u{i}", "pid": i, "v": float(i)}])
+             for i in range(3)],
+        )
+        assert tmp_store.scan("properties").count() == 3
+        tmp_store.compact("properties")
+        assert sorted(r.uuid for r in tmp_store.scan("properties").collect()) == ["u0", "u1", "u2"]
+
+        before = tmp_store.list_files("properties")
+        write_versions(tmp_store, [(T0 + dt.timedelta(days=3), [{"uuid": "u3", "pid": 3, "v": 3.0}])])
+        assert tmp_store.scan("properties").count() == 4
+        for f in tmp_store.list_files("properties") - before:
+            Path(f).unlink()
+        assert sorted(r.uuid for r in tmp_store.scan("properties").collect()) == ["u0", "u1", "u2"]
+
+    def test_options_kept_apart_and_corruption_seen(self, spark, tmp_store):
+        tmp_store.write_batch("t", spark.createDataFrame([Row(uuid="a", x=1)]), scraped_at=T0)
+        tmp_store.write_batch("t", spark.createDataFrame([Row(uuid="b", y="z")]), scraped_at=T0)
+        path = str(tmp_store.table_path("t"))
+        merged = spark.read.option("mergeSchema", "true").parquet(path).schema
+        single = spark.read.parquet(path).schema
+        assert merged != single
+        for _ in range(2):  # cold, then warm
+            assert tmp_store.scan("t").schema == merged
+            assert tmp_store.scan("t", merge_schema=False).schema == single
+            assert tmp_store.scan("t", tolerate_corrupt=True).schema == merged
+
+        # same-size garbage over the file holding row "b"; drop its .crc
+        # sidecar so the parquet layer, not the checksum, sees the damage
+        victim = next(
+            f for f in map(Path, tmp_store.list_files("t"))
+            if spark.read.parquet(str(f)).filter("uuid = 'b'").count()
+        )
+        victim.write_bytes(b"\0" * victim.stat().st_size)
+        crc = victim.parent / f".{victim.name}.crc"
+        if crc.exists():
+            crc.unlink()
+        with pytest.raises(Exception):
+            tmp_store.scan("t").collect()
+        assert [r.uuid for r in tmp_store.scan("t", tolerate_corrupt=True).collect()] == ["a"]
+
+    def test_snapshot_after_rematerialize(self, tmp_store):
+        write_versions(tmp_store, [(T0, [{"uuid": "u1", "pid": 1, "v": 1.0}])])
+        assert tmp_store.materialize_current("properties") == 1
+        for _ in range(2):  # cold, then warm
+            assert [r.v for r in tmp_store.current_snapshot("properties").collect()] == [1.0]
+
+        write_versions(
+            tmp_store,
+            [(T0 + dt.timedelta(days=1), [{"uuid": "u1", "pid": 1, "v": 2.0, "note": "n"},
+                                          {"uuid": "u2", "pid": 2, "v": 5.0, "note": None}])],
+        )
+        assert tmp_store.materialize_current("properties") == 2
+        snap = tmp_store.current_snapshot("properties")
+        assert "note" in snap.columns
+        assert {r.uuid: (r.v, r.note) for r in snap.collect()} == {
+            "u1": (2.0, "n"), "u2": (5.0, None)
+        }
