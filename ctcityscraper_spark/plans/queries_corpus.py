@@ -1823,7 +1823,7 @@ _E2E_DSIR_B = 2048
 _E2E_DSIR_NUM = -2
 _E2E_DSIR_DEN = 5
 _E2E_DSIR_TGT = "coalesce(lang = 'en', FALSE)"
-_E2E_CLEAN_TOKS = TOKS.replace("trim(text)", "trim(clean_text)")
+_E2E_CLEAN_TOKS = TOKS.replace("trim(text, ", "trim(clean_text, ")
 assert _E2E_CLEAN_TOKS != TOKS
 
 

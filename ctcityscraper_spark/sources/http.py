@@ -50,6 +50,77 @@ def with_retries(
             sleep(delay * backoff ** (attempt - 1))
 
 
+def _fetch_stage(
+    spark: SparkSession,
+    source: SourceDefinition,
+    base_url: str,
+    entry_ids: list,
+    rate_per_sec: float,
+    num_partitions: int | None,
+    retries: int,
+    retry_delay: float,
+    payload_rows: Callable[[Any], Iterator[tuple]],
+    schema: str,
+) -> DataFrame:
+    """The distributed fetch stage both public fetch paths share: ids ->
+    mapInPandas(rate-limited, retried ``source.scrape_fn``) -> ``schema``
+    rows, in which ``seq`` is the entry's position in ``entry_ids``.
+
+    ``payload_rows(payload)`` yields the columns between ``entry_id`` and
+    ``invalid`` for each output row of one fetched entry. It runs inside
+    the entry's error capture, so its failure is the entry's error like a
+    failed fetch. An invalid or failed entry emits one row with those
+    columns NULL: errors never fail the stage (the engine applies the
+    circuit-breaker policy afterwards)."""
+    # default partitioning: >=256 entries per partition — Python-worker
+    # spin-up (~1-2s each) dwarfs the work for small fetch batches, so tiny
+    # chunks must not fan out to every core. Network-bound sources pass
+    # num_partitions (=workers) explicitly.
+    n_parts = num_partitions or max(
+        1, min(spark.sparkContext.defaultParallelism, len(entry_ids) // 256 + 1)
+    )
+    scrape_fn = source.scrape_fn
+    invalid_exc = source.invalid_entry_exception
+    columns = [col.split()[0] for col in schema.split(",")]
+    no_payload = (None,) * (len(columns) - 4)
+
+    def run_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        bucket = partition_bucket(rate_per_sec, n_parts)
+        for pdf in batches:
+            recs: list[tuple] = []
+            for seq, entry_id in zip(pdf["seq"], pdf["entry_id"]):
+                bucket.acquire()
+                head = (int(seq), str(entry_id))
+                try:
+                    payload = with_retries(
+                        lambda: scrape_fn(base_url, entry_id),
+                        retries=retries,
+                        delay=retry_delay,
+                        no_retry=(invalid_exc,),
+                    )
+                    recs.extend(
+                        head + row + (False, None) for row in payload_rows(payload)
+                    )
+                except invalid_exc:
+                    recs.append(head + no_payload + (True, None))
+                except Exception as e:  # captured, adjudicated by the engine
+                    recs.append(
+                        head + no_payload + (False, f"{type(e).__name__}: {e}")
+                    )
+            yield pd.DataFrame(recs, columns=columns)
+
+    # Arrow-path local frame (functions/localdf.py): the plain-list form
+    # fans pickled rows across defaultParallelism Python workers before
+    # the repartition (profiled 0.35 s per load on the ingest bench)
+    ids_df = local_rows_df(
+        spark,
+        [(i, str(eid)) for i, eid in enumerate(entry_ids)],
+        ["seq", "entry_id"],
+        "seq long, entry_id string",
+    ).repartition(n_parts)
+    return ids_df.mapInPandas(run_partition, schema)
+
+
 def fetch_entries_distributed(
     spark: SparkSession,
     source: SourceDefinition,
@@ -68,54 +139,14 @@ def fetch_entries_distributed(
     circuit-breaker policy afterwards). This is the Spark restatement of the
     reference's ThreadPoolExecutor loop (src/engine/engine.py:271-308).
     """
-    # default partitioning: >=256 entries per partition — Python-worker
-    # spin-up (~1-2s each) dwarfs the work for small fetch batches, so tiny
-    # chunks must not fan out to every core. Network-bound sources pass
-    # num_partitions (=workers) explicitly.
-    n_parts = num_partitions or max(
-        1, min(spark.sparkContext.defaultParallelism, len(entry_ids) // 256 + 1)
+
+    def payload_rows(payload):
+        yield (None if payload is None else json.dumps(payload),)
+
+    return _fetch_stage(
+        spark, source, base_url, entry_ids, rate_per_sec, num_partitions,
+        retries, retry_delay, payload_rows, FETCH_RESULT_SCHEMA,
     )
-    scrape_fn = source.scrape_fn
-    invalid_exc = source.invalid_entry_exception
-
-    def fetch_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bucket = partition_bucket(rate_per_sec, n_parts)
-        for pdf in batches:
-            out = {"seq": [], "entry_id": [], "payload": [], "invalid": [], "error": []}
-            for seq, entry_id in zip(pdf["seq"], pdf["entry_id"]):
-                bucket.acquire()
-                payload = invalid = err = None
-                try:
-                    result = with_retries(
-                        lambda: scrape_fn(base_url, entry_id),
-                        retries=retries,
-                        delay=retry_delay,
-                        no_retry=(invalid_exc,),
-                    )
-                    payload = None if result is None else json.dumps(result)
-                    invalid = False
-                except invalid_exc:
-                    invalid = True
-                except Exception as e:  # captured, adjudicated by the engine
-                    invalid = False
-                    err = f"{type(e).__name__}: {e}"
-                out["seq"].append(int(seq))
-                out["entry_id"].append(str(entry_id))
-                out["payload"].append(payload)
-                out["invalid"].append(invalid)
-                out["error"].append(err)
-            yield pd.DataFrame(out)
-
-    # Arrow-path local frame (functions/localdf.py): the plain-list form
-    # fans pickled rows across defaultParallelism Python workers before
-    # the repartition (profiled 0.35 s per load on the ingest bench)
-    ids_df = local_rows_df(
-        spark,
-        [(i, str(eid)) for i, eid in enumerate(entry_ids)],
-        ["seq", "entry_id"],
-        "seq long, entry_id string",
-    ).repartition(n_parts)
-    return ids_df.mapInPandas(fetch_partition, FETCH_RESULT_SCHEMA)
 
 
 # distributed-flatten output: one row per (entry, table, flattened row);
@@ -142,54 +173,19 @@ def fetch_and_flatten_distributed(
     ``source.table_schemas`` so the engine can parse ``row_json`` with
     ``from_json`` instead of driver-side inference.
     """
-    # default partitioning: >=256 entries per partition — Python-worker
-    # spin-up (~1-2s each) dwarfs the work for small fetch batches, so tiny
-    # chunks must not fan out to every core. Network-bound sources pass
-    # num_partitions (=workers) explicitly.
-    n_parts = num_partitions or max(
-        1, min(spark.sparkContext.defaultParallelism, len(entry_ids) // 256 + 1)
+    flatten_fn = source.flatten_fn
+
+    def payload_rows(payload):
+        emitted = False
+        if payload is not None:
+            for table, rows in flatten_fn([payload]).items():
+                for row in rows:
+                    yield table, json.dumps(row)
+                    emitted = True
+        if not emitted:
+            yield None, None
+
+    return _fetch_stage(
+        spark, source, base_url, entry_ids, rate_per_sec, num_partitions,
+        retries, retry_delay, payload_rows, FETCH_FLAT_SCHEMA,
     )
-    scrape_fn, flatten_fn = source.scrape_fn, source.flatten_fn
-    invalid_exc = source.invalid_entry_exception
-
-    def run_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bucket = partition_bucket(rate_per_sec, n_parts)
-        for pdf in batches:
-            recs: list[tuple] = []
-            for seq, entry_id in zip(pdf["seq"], pdf["entry_id"]):
-                bucket.acquire()
-                try:
-                    payload = with_retries(
-                        lambda: scrape_fn(base_url, entry_id),
-                        retries=retries,
-                        delay=retry_delay,
-                        no_retry=(invalid_exc,),
-                    )
-                    emitted = False
-                    if payload is not None:
-                        for table, rows in flatten_fn([payload]).items():
-                            for row in rows:
-                                recs.append(
-                                    (int(seq), str(entry_id), table, json.dumps(row), False, None)
-                                )
-                                emitted = True
-                    if not emitted:
-                        recs.append((int(seq), str(entry_id), None, None, False, None))
-                except invalid_exc:
-                    recs.append((int(seq), str(entry_id), None, None, True, None))
-                except Exception as e:
-                    recs.append(
-                        (int(seq), str(entry_id), None, None, False, f"{type(e).__name__}: {e}")
-                    )
-            yield pd.DataFrame(
-                recs, columns=["seq", "entry_id", "table", "row_json", "invalid", "error"]
-            )
-
-    # Arrow-path local frame — same rationale as fetch_entries_distributed
-    ids_df = local_rows_df(
-        spark,
-        [(i, str(eid)) for i, eid in enumerate(entry_ids)],
-        ["seq", "entry_id"],
-        "seq long, entry_id string",
-    ).repartition(n_parts)
-    return ids_df.mapInPandas(run_partition, FETCH_FLAT_SCHEMA)

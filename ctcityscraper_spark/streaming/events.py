@@ -34,6 +34,20 @@ private runner, ``_zone_stream``. Per micro-batch, in order, it guarantees:
   skips completed batches, every write overwrites this batch's own
   partition (a replayed batch rewrites, never appends), and every zone read
   is strictly-before, so a replay never sees its own half-written deltas.
+
+Read side. Every ``read_*`` of a stored zone goes through ONE private
+reader path, ``_read_zone``, which reads the marker once and applies the
+same rule the stamp side does (``_zone_marker``):
+
+- an absent or empty zone (no marker, no data) reads as the reader's None
+  shape;
+- data with no marker refuses (unversioned stored state);
+- otherwise the stored marker must equal the family's
+  ``_<family>_zone_meta(**params)``, where every parameter the caller
+  omits resolves from the stored marker — so a parameterless read checks
+  kind and format version, and every parameter passed must match.
+
+:func:`ensure_zone_meta` is that rule plus the first-batch stamp.
 """
 
 from __future__ import annotations
@@ -229,15 +243,6 @@ def _hadoop_fs(spark: SparkSession, base: str):
     return fs, path_cls
 
 
-def _list_batch_dirs(
-    spark: SparkSession, base: str, before_batch: int
-) -> list[tuple[int, str]]:
-    """Sorted (batch_id, dir) for ``base/batch_id=N`` children with
-    ``N < before_batch`` holding at least one parquet file."""
-    return [(bid, p) for bid, p, _ in _list_batch_dirs_flat(
-        spark, base, before_batch)]
-
-
 def _list_batch_dirs_flat(
     spark: SparkSession, base: str, before_batch: int
 ) -> list[tuple[int, str, bool]]:
@@ -321,33 +326,67 @@ def read_zone_meta(spark: SparkSession, base: str) -> dict | None:
         stream.close()
 
 
-def _zone_has_data(spark: SparkSession, base: str) -> bool:
-    return bool(
-        _list_batch_dirs(spark, base, 2**62) or _compacted_epochs(spark, base)
+def _zone_marker(
+    spark: SparkSession, base: str, meta_fn, rebuild_hint: str,
+    params: dict | None = None, data_dirs: list[str] | None = None,
+) -> dict | None:
+    """The one marker rule, shared by the stamp side and every reader; it
+    reads the zone's marker once and returns it, or None for a zone with
+    neither marker nor data.
+
+    - No marker, data present (probed under ``data_dirs`` for a COMPOSITE
+      zone such as ``streaming_corpus_prep``'s base_dir, whose batches live
+      under ``base/<zone>/batch_id=*``): an unversioned, pre-stamping zone
+      whose rows may have been built under another position derivation,
+      undetectable after the fact — refuse with the rebuild hint.
+    - Marker present: it must equal ``meta_fn(**resolved)``. Each parameter
+      of ``meta_fn`` resolves to the caller's value in ``params`` or, when
+      omitted (None), to the stored marker's; every parameter the caller
+      passes therefore participates, so a partial ``k=128`` against a
+      ``k=256`` zone refuses instead of silently reading under the stored
+      value. A parameter the marker cannot supply makes it another
+      family's marker, which refuses too."""
+    import inspect
+
+    stored = read_zone_meta(spark, base)
+    if stored is None:
+        if any(
+            _list_batch_dirs_flat(spark, d, 2**62) or _compacted_epochs(spark, d)
+            for d in data_dirs or [base]
+        ):
+            raise ValueError(
+                f"stored zone {base} has data but no {ZONE_META_FILE} — "
+                "unversioned stored state, predating format stamping, whose "
+                f"rows cannot be trusted under the current code. {rebuild_hint}"
+            )
+        return None
+    resolved = {n: stored.get(n) for n in inspect.signature(meta_fn).parameters}
+    resolved.update({n: v for n, v in (params or {}).items() if v is not None})
+    expected = (
+        meta_fn(**resolved) if None not in resolved.values()
+        else f"a marker holding {sorted(resolved)}"
     )
+    if stored != expected:
+        raise ValueError(
+            f"stored zone {base} was written under {stored} but the "
+            f"current code expects {expected}. {rebuild_hint}"
+        )
+    return stored
 
 
 def ensure_zone_meta(
     spark: SparkSession, base: str, expected: dict, rebuild_hint: str,
     data_dirs: list[str] | None = None,
 ) -> None:
-    """Stamp or validate a zone's format metadata.
-
-    - No marker, no data: fresh zone — write the marker.
-    - No marker, data present: an unversioned (pre-stamping) stored zone —
-      its rows may have been built under a different position derivation,
-      which is undetectable after the fact; refuse with the rebuild hint.
-    - Marker present: every field must match ``expected`` exactly;
-      mismatch (format version bump, different m_bits/k/width/depth/seed)
-      refuses with the rebuild hint.
+    """Stamp or validate a zone's format metadata: :func:`_zone_marker`'s
+    rule with ``expected`` as the marker, plus the first-batch stamp — a
+    fresh zone (no marker, no data) gets ``expected`` written.
 
     ``data_dirs`` overrides where the "data present" probe looks: a
-    COMPOSITE zone (``streaming_corpus_prep``'s base_dir, whose batches
-    live under ``base/<zone>/batch_id=*``, not ``base/batch_id=*``) must
-    pass its per-zone subdirs here — otherwise a deleted/missing marker
-    over live sub-zone data would be treated as fresh and silently
-    restamped with the CURRENT parameters, exactly the mixed-parameter
-    corruption the marker exists to prevent.
+    composite zone must pass its per-zone subdirs here — otherwise a
+    deleted/missing marker over live sub-zone data would be treated as
+    fresh and silently restamped with the CURRENT parameters, exactly the
+    mixed-parameter corruption the marker exists to prevent.
 
     Idempotent and cheap (one driver-side stat + tiny file); sinks call it
     every micro-batch so a stream resumed under changed parameters dies on
@@ -355,27 +394,17 @@ def ensure_zone_meta(
     """
     import json
 
-    existing = read_zone_meta(spark, base)
-    if existing is None:
-        probe_dirs = data_dirs if data_dirs is not None else [base]
-        if any(_zone_has_data(spark, d) for d in probe_dirs):
-            raise ValueError(
-                f"stored zone {base} has data but no {ZONE_META_FILE} — it "
-                "predates format stamping and its row positions cannot be "
-                f"trusted under the current code. {rebuild_hint}"
-            )
-        fs, path_cls = _hadoop_fs(spark, base)
-        fs.mkdirs(path_cls(base))
-        out = fs.create(path_cls(f"{base}/{ZONE_META_FILE}"), True)
-        try:
-            out.write(json.dumps(expected, sort_keys=True).encode("utf-8"))
-        finally:
-            out.close()
-    elif existing != expected:
-        raise ValueError(
-            f"stored zone {base} was written under {existing} but the "
-            f"current code expects {expected}. {rebuild_hint}"
-        )
+    if _zone_marker(
+        spark, base, lambda: expected, rebuild_hint, data_dirs=data_dirs
+    ) is not None:
+        return
+    fs, path_cls = _hadoop_fs(spark, base)
+    fs.mkdirs(path_cls(base))
+    out = fs.create(path_cls(f"{base}/{ZONE_META_FILE}"), True)
+    try:
+        out.write(json.dumps(expected, sort_keys=True).encode("utf-8"))
+    finally:
+        out.close()
 
 
 def check_zone_meta(
@@ -384,65 +413,26 @@ def check_zone_meta(
     """Read-side validation: like :func:`ensure_zone_meta` but never
     writes — an empty/absent zone passes (the reader returns None anyway),
     a data-bearing zone must carry a matching marker."""
-    _checked_zone_meta(spark, base, rebuild_hint, expected=expected)
+    _zone_marker(spark, base, lambda: expected, rebuild_hint)
 
 
-def _checked_zone_meta(
-    spark: SparkSession,
-    base: str,
-    rebuild_hint: str,
-    *,
-    expected: dict | None = None,
-    kind: str | None = None,
-    data_dirs: list[str] | None = None,
-) -> dict | None:
-    """The one read-side marker check: the zone's marker, or None for an
-    absent/empty zone. A zone with data (probed under ``data_dirs`` for
-    composite zones) but no marker raises, as does a marker that differs
-    from ``expected`` or is not ``kind`` format_version 1 — rows written
-    under another contract are never returned."""
-    meta = read_zone_meta(spark, base)
+def _read_zone(
+    spark: SparkSession, base: str, meta_fn, rebuild_hint: str,
+    before_batch: int = 2**62, table_prefix: str | None = None, *,
+    params: dict | None = None, read=None, data_dirs: list[str] | None = None,
+) -> tuple:
+    """The one reader path of the stored zones: ``(rows, marker)`` once
+    :func:`_zone_marker` accepts the marker, ``(None, None)`` for an
+    absent or empty zone — rows written under another contract are never
+    returned. ``rows`` is every batch strictly before ``before_batch``
+    (:func:`read_incremental_zone`), or ``read()`` for a zone laid out
+    otherwise (newest-wins keyed state, a multi-zone index)."""
+    meta = _zone_marker(spark, base, meta_fn, rebuild_hint, params, data_dirs)
     if meta is None:
-        if any(_zone_has_data(spark, d) for d in data_dirs or [base]):
-            raise ValueError(
-                f"stored zone {base} has data but no {ZONE_META_FILE} — "
-                f"unversioned stored state. {rebuild_hint}"
-            )
-        return None
-    if expected is not None and meta != expected:
-        raise ValueError(
-            f"stored zone {base} was written under {meta} but this "
-            f"reader expects {expected}. {rebuild_hint}"
-        )
-    if kind is not None and (
-        meta.get("kind") != kind or meta.get("format_version") != 1
-    ):
-        raise ValueError(
-            f"stored zone {base} was written under {meta.get('kind')!r} "
-            f"format_version={meta.get('format_version')!r}; this reader "
-            f"expects {kind} v1. {rebuild_hint}"
-        )
-    return meta
-
-
-def _resolve_zone_params(
-    spark: SparkSession, zone_dir: str, provided: dict, meta_fn, hint: str
-) -> dict:
-    """Merge caller-provided zone parameters over the stored marker and
-    validate the result. EVERY parameter the caller passed participates
-    in the check — a partial ``k=128`` against a ``k=256`` zone fails
-    loudly instead of being silently replaced by the stored value (the
-    old all-or-nothing gate only validated when the caller passed the
-    full set). Parameters the caller omitted resolve from the marker;
-    :func:`check_zone_meta` still rejects a data-bearing zone with no
-    marker and passes an empty zone (the reader returns None anyway)."""
-    existing = read_zone_meta(spark, zone_dir) or {}
-    resolved = {
-        name: (val if val is not None else existing.get(name))
-        for name, val in provided.items()
-    }
-    check_zone_meta(spark, zone_dir, meta_fn(**resolved), hint)
-    return resolved
+        return None, None
+    if read is None:
+        return read_incremental_zone(spark, base, before_batch, table_prefix), meta
+    return read(), meta
 
 
 def read_incremental_zone(
@@ -612,7 +602,7 @@ def compact_incremental_zone(
             full.write.mode("overwrite").parquet(path)
     # cleanup strictly after the new epoch committed
     fs, path_cls = _hadoop_fs(spark, base)
-    for _, p in _list_batch_dirs(spark, base, upto):
+    for _, p, _ in _list_batch_dirs_flat(spark, base, upto):
         fs.delete(path_cls(p), True)
     for m, p in epochs:
         if m < upto:
@@ -773,14 +763,11 @@ def read_bloom_words(
     loses the no-false-negative guarantee (dedup.BLOOM_FORMAT_VERSION)."""
     from ctcityscraper_spark.operators.dedup import merge_bloom_words
 
-    _resolve_zone_params(
-        spark, words_dir, {"m_bits": m_bits, "k": k},
-        _bloom_zone_meta, _BLOOM_REBUILD_HINT,
+    words, _ = _read_zone(
+        spark, words_dir, _bloom_zone_meta, _BLOOM_REBUILD_HINT, before_batch,
+        table_prefix, params=dict(m_bits=m_bits, k=k),
     )
-    words = read_incremental_zone(spark, words_dir, before_batch, table_prefix)
-    if words is None:
-        return None
-    return merge_bloom_words(words)
+    return None if words is None else merge_bloom_words(words)
 
 
 def streaming_bloom_membership(
@@ -901,14 +888,11 @@ def read_cms_cells(
     resolve from the marker (format version always pinned)."""
     from ctcityscraper_spark.operators.text import merge_cms_cells
 
-    _resolve_zone_params(
-        spark, cells_dir, {"width": width, "depth": depth, "seed": seed},
-        _cms_zone_meta, _CMS_REBUILD_HINT,
+    cells, _ = _read_zone(
+        spark, cells_dir, _cms_zone_meta, _CMS_REBUILD_HINT, before_batch,
+        table_prefix, params=dict(width=width, depth=depth, seed=seed),
     )
-    cells = read_incremental_zone(spark, cells_dir, before_batch, table_prefix)
-    if cells is None:
-        return None
-    return merge_cms_cells(cells)
+    return None if cells is None else merge_cms_cells(cells)
 
 
 def streaming_cms(
@@ -1021,13 +1005,11 @@ def read_gram_rows(
     always pinned)."""
     from ctcityscraper_spark.operators.similarity import merge_gram_rows
 
-    _resolve_zone_params(
-        spark, gram_dir, {"dims": dims}, _gram_zone_meta, _GRAM_REBUILD_HINT
+    rows, _ = _read_zone(
+        spark, gram_dir, _gram_zone_meta, _GRAM_REBUILD_HINT, before_batch,
+        table_prefix, params=dict(dims=dims),
     )
-    rows = read_incremental_zone(spark, gram_dir, before_batch, table_prefix)
-    if rows is None:
-        return None
-    return merge_gram_rows(rows)
+    return None if rows is None else merge_gram_rows(rows)
 
 
 def streaming_gram(
@@ -1112,14 +1094,11 @@ def read_kmv_hashes(
     omitted ones resolve from the marker (format version always pinned)."""
     from ctcityscraper_spark.operators.text import merge_kmv
 
-    k = _resolve_zone_params(
-        spark, hashes_dir, {"k": k, "seed": seed},
-        _kmv_zone_meta, _KMV_REBUILD_HINT,
-    )["k"]
-    rows = read_incremental_zone(spark, hashes_dir, before_batch)
-    if rows is None:
-        return None
-    return merge_kmv(rows, k)
+    rows, meta = _read_zone(
+        spark, hashes_dir, _kmv_zone_meta, _KMV_REBUILD_HINT, before_batch,
+        params=dict(k=k, seed=seed),
+    )
+    return None if rows is None else merge_kmv(rows, meta["k"])
 
 
 def streaming_kmv(
@@ -1197,14 +1176,11 @@ def read_quantile_sample(
     resolve from the marker (format version always pinned)."""
     from ctcityscraper_spark.operators.text import merge_quantile_sketches
 
-    k = _resolve_zone_params(
-        spark, sample_dir, {"k": k, "seed": seed, "value_col": value_col},
-        _quantile_zone_meta, _QUANTILE_REBUILD_HINT,
-    )["k"]
-    rows = read_incremental_zone(spark, sample_dir, before_batch)
-    if rows is None:
-        return None
-    return merge_quantile_sketches(rows, k)
+    rows, meta = _read_zone(
+        spark, sample_dir, _quantile_zone_meta, _QUANTILE_REBUILD_HINT,
+        before_batch, params=dict(k=k, seed=seed, value_col=value_col),
+    )
+    return None if rows is None else merge_quantile_sketches(rows, meta["k"])
 
 
 def streaming_quantile(
@@ -1914,29 +1890,6 @@ _IVF_REBUILD_HINT = (
 )
 
 
-def _read_validated_zone(
-    spark: SparkSession,
-    zone_dir: str,
-    kind: str,
-    payload_key: str,
-    rebuild_hint: str,
-    before_batch: int = 2**62,
-    table_prefix: str | None = None,
-) -> tuple[DataFrame | None, object | None]:
-    """Shared validation + read for quantizer-carrying zones
-    (:func:`read_ivf_index`, :func:`read_pq_codes`): rows merged for
-    batches strictly before ``before_batch`` plus the marker's frozen
-    quantizer payload. An absent zone is ``(None, None)``; a data-bearing
-    zone with no marker, a wrong kind, or a bumped format version raises
-    with the family's rebuild hint — rows written under a different
-    quantizer must never be returned."""
-    meta = _checked_zone_meta(spark, zone_dir, rebuild_hint, kind=kind)
-    if meta is None:
-        return None, None
-    rows = read_incremental_zone(spark, zone_dir, before_batch, table_prefix)
-    return rows, meta[payload_key]
-
-
 def read_ivf_index(
     spark: SparkSession,
     index_dir: str,
@@ -1954,10 +1907,11 @@ def read_ivf_index(
     shuffle-free on the index side. A data-bearing zone with no marker, a
     wrong kind, or a bumped format version raises — probing rows assigned
     under different centroids silently destroys recall."""
-    return _read_validated_zone(
-        spark, index_dir, "ivf_index", "centroids", _IVF_REBUILD_HINT,
-        before_batch, table_prefix,
+    rows, meta = _read_zone(
+        spark, index_dir, _ivf_zone_meta, _IVF_REBUILD_HINT, before_batch,
+        table_prefix,
     )
+    return rows, None if meta is None else meta["centroids"]
 
 
 def streaming_ivf(
@@ -2105,10 +2059,10 @@ def read_pq_codes(
     :func:`read_ivf_index`: codes written under a different codebook
     would ADC-score as garbage, so an unversioned or mismatched zone
     raises instead of returning rows."""
-    return _read_validated_zone(
-        spark, codes_dir, "pq_codes", "codebook", _PQ_REBUILD_HINT,
-        before_batch,
+    rows, meta = _read_zone(
+        spark, codes_dir, _pq_zone_meta, _PQ_REBUILD_HINT, before_batch
     )
+    return rows, None if meta is None else meta["codebook"]
 
 
 def streaming_pq(
@@ -2190,13 +2144,12 @@ def read_kmeans_state(
     batch and long sums are order-free). Marker validation as in
     :func:`read_ivf_index`: state aggregated under different centroids
     must never merge — the sums would mix assignment regimes."""
-    rows, ctrs = _read_validated_zone(
-        spark, state_dir, "kmeans_state", "centroids_micros",
-        _KMEANS_REBUILD_HINT, before_batch,
+    rows, meta = _read_zone(
+        spark, state_dir, _kmeans_zone_meta, _KMEANS_REBUILD_HINT, before_batch
     )
-    if ctrs is not None:
-        ctrs = [[int(x) for x in c] for c in ctrs]
-    return rows, ctrs
+    if meta is None:
+        return None, None
+    return rows, [[int(x) for x in c] for c in meta["centroids_micros"]]
 
 
 def refreshed_kmeans_centroids(
@@ -2304,8 +2257,8 @@ def _layered_keyed_read(
     return kept.unionByName(tail_latest)
 
 
-def _word_freqs_zone_meta(text: str) -> dict:
-    return {"kind": "word_freqs", "format_version": 1, "config": {"text": text}}
+def _word_freqs_zone_meta(config: dict) -> dict:
+    return {"kind": "word_freqs", "format_version": 1, "config": config}
 
 
 _WORD_FREQS_REBUILD_HINT = (
@@ -2325,10 +2278,11 @@ def read_word_freqs(
     table IS ``bpe_word_freqs`` over everything ingested, exactly — so
     ``bpe.bpe_train_from_freqs`` retrains the tokenizer WITHOUT
     re-reading the corpus."""
-    return _read_validated_zone(
-        spark, freqs_dir, "word_freqs", "config", _WORD_FREQS_REBUILD_HINT,
+    rows, meta = _read_zone(
+        spark, freqs_dir, _word_freqs_zone_meta, _WORD_FREQS_REBUILD_HINT,
         before_batch,
     )
+    return rows, None if meta is None else meta["config"]
 
 
 def streaming_word_freqs(
@@ -2357,7 +2311,8 @@ def streaming_word_freqs(
 
     return _zone_stream(
         stream, checkpoint_dir, body,
-        meta=(freqs_dir, _word_freqs_zone_meta(text), _WORD_FREQS_REBUILD_HINT),
+        meta=(freqs_dir, _word_freqs_zone_meta({"text": text}),
+              _WORD_FREQS_REBUILD_HINT),
         compact_every=compact_every,
         compactions=[(freqs_dir, dict(transform=sum_word_freqs))],
     )
@@ -2386,15 +2341,12 @@ def read_cc_assignments(
     exists yet; marker validation as in the other stored zones."""
     from ctcityscraper_spark.operators.graph import latest_components
 
-    meta = _checked_zone_meta(
-        spark, state_dir, _CC_REBUILD_HINT, kind="cc_assignments"
+    return _read_zone(
+        spark, state_dir, _cc_zone_meta, _CC_REBUILD_HINT,
+        read=lambda: _layered_keyed_read(
+            spark, state_dir, "node", latest_components, before_batch
+        ),
     )
-    if meta is None:
-        return None, None
-    merged = _layered_keyed_read(
-        spark, state_dir, "node", latest_components, before_batch
-    )
-    return merged, meta
 
 
 def streaming_components(
@@ -2450,11 +2402,8 @@ def streaming_components(
     )
 
 
-def _drop_list_zone_meta(quality_sql: str) -> dict:
-    return {
-        "kind": "dedup_drop_list", "format_version": 1,
-        "config": {"quality_sql": quality_sql},
-    }
+def _drop_list_zone_meta(config: dict) -> dict:
+    return {"kind": "dedup_drop_list", "format_version": 1, "config": config}
 
 
 _DROP_LIST_REBUILD_HINT = (
@@ -2487,16 +2436,13 @@ def read_drop_list(
     over everything ingested, equal to a fresh cascade->CC->keep-best
     run (pinned in tests). ``(None, None)`` when nothing exists yet."""
     drops_dir = f"{base_dir}/drops"
-    meta = _checked_zone_meta(
-        spark, base_dir, _DROP_LIST_REBUILD_HINT, kind="dedup_drop_list",
+    return _read_zone(
+        spark, base_dir, _drop_list_zone_meta, _DROP_LIST_REBUILD_HINT,
+        read=lambda: _layered_keyed_read(
+            spark, drops_dir, "drop_id", latest_drops, before_batch
+        ),
         data_dirs=[drops_dir, f"{base_dir}/assignments"],
     )
-    if meta is None:
-        return None, None
-    merged = _layered_keyed_read(
-        spark, drops_dir, "drop_id", latest_drops, before_batch
-    )
-    return merged, meta
 
 
 def streaming_drop_list(
@@ -2566,7 +2512,7 @@ def streaming_drop_list(
 
     return _zone_stream(
         stream, checkpoint_dir, body,
-        meta=(base_dir, _drop_list_zone_meta(quality_sql),
+        meta=(base_dir, _drop_list_zone_meta({"quality_sql": quality_sql}),
               _DROP_LIST_REBUILD_HINT, list(z.values())),
         compact_every=compact_every,
         compactions=[
@@ -2600,10 +2546,10 @@ def read_dsir_model(
     exactly. Marker validation as in :func:`read_ivf_index`: counts
     hashed under a different bucket count / seed / ngram / target
     predicate must never merge."""
-    return _read_validated_zone(
-        spark, model_dir, "dsir_model", "config", _DSIR_REBUILD_HINT,
-        before_batch,
+    rows, meta = _read_zone(
+        spark, model_dir, _dsir_zone_meta, _DSIR_REBUILD_HINT, before_batch
     )
+    return rows, None if meta is None else meta["config"]
 
 
 def streaming_dsir(
@@ -2694,28 +2640,22 @@ def read_bm25_index(
     kind, or drifted layout parameters raises with the rebuild hint —
     postings bucketed under a different ``n_term_buckets`` must never
     serve a probe that folds buckets under the current one."""
-    zones = [f"{index_dir}/{n}" for n in ("postings", "term_stats", "totals")]
-    meta = _checked_zone_meta(
-        spark, index_dir, _BM25_INDEX_REBUILD_HINT, kind="bm25_index",
+    names = ("postings", "term_stats", "totals")
+    zones = [f"{index_dir}/{n}" for n in names]
+    frames, meta = _read_zone(
+        spark, index_dir, _bm25_index_zone_meta, _BM25_INDEX_REBUILD_HINT,
+        read=lambda: [read_incremental_zone(spark, z, before_batch) for z in zones],
         data_dirs=zones,
     )
-    if meta is None:
-        return None, None, None, None
-    frames = [
-        read_incremental_zone(spark, zdir, before_batch) for zdir in zones
-    ]
-    if all(f is None for f in frames):
+    if meta is None or all(f is None for f in frames):
         # marker stamped but no delta committed yet (crash between
         # ensure_zone_meta and the first batch write, or an empty
         # source) — return all-None so callers take the same "no index
         # yet" branch as the meta-is-None case, instead of feeding None
         # frames to bm25_topk_from_index and dying on AttributeError
         return None, None, None, None
-    if any(f is None for f in frames):
-        missing = [
-            n for n, f in zip(("postings", "term_stats", "totals"), frames)
-            if f is None
-        ]
+    missing = [n for n, f in zip(names, frames) if f is None]
+    if missing:
         raise ValueError(
             f"stored zone {index_dir} is missing {missing} while sibling "
             f"zones have data — torn index state. {_BM25_INDEX_REBUILD_HINT}"

@@ -364,18 +364,35 @@ class TestSnapshotsAndHooks:
         assert seen["changed"] == ["u3"]
 
 
-class TestErrorThreshold:
-    def test_abort_after_consecutive(self, spark, tmp_store):
-        ids = [1, 8001, 8002, 8003, 2]
-        with pytest.raises(CircuitBreakerTripped):
-            run_load(spark, tmp_store, make_source(), ResolvedParams("newhaven", entry_ids=ids),
-                     max_consecutive_errors=3, retries=0, retry_delay=0)
+# both engine fetch paths: driver flatten (fetch_entries_distributed) and
+# distributed flatten (fetch_and_flatten_distributed, chosen by table_schemas)
+FETCH_PATHS = pytest.mark.parametrize(
+    "table_schemas", [None, TestDistributedFlatten.SCHEMAS],
+    ids=["driver_flatten", "distributed_flatten"],
+)
 
-    def test_success_resets(self, spark, tmp_store):
-        ids = [8001, 8002, 1, 8003, 8004, 2]
-        stats = run_load(spark, tmp_store, make_source(), ResolvedParams("newhaven", entry_ids=ids),
+
+class TestErrorThreshold:
+    @FETCH_PATHS
+    def test_abort_after_consecutive(self, spark, tmp_store, table_schemas):
+        # the invalid entry resets the run like a success; the three
+        # failing entries after it trip the breaker
+        ids = [1, 8001, 9001, 8002, 8003, 8004, 2]
+        with pytest.raises(CircuitBreakerTripped) as tripped:
+            run_load(spark, tmp_store, make_source(table_schemas=table_schemas),
+                     ResolvedParams("newhaven", entry_ids=ids),
+                     max_consecutive_errors=3, retries=0, retry_delay=0)
+        assert tripped.value.consecutive == 3
+        assert "8004" in tripped.value.last_error
+
+    @FETCH_PATHS
+    def test_success_resets(self, spark, tmp_store, table_schemas):
+        ids = [8001, 8002, 1, 8003, 8004, 9001, 2]
+        stats = run_load(spark, tmp_store, make_source(table_schemas=table_schemas),
+                         ResolvedParams("newhaven", entry_ids=ids),
                          max_consecutive_errors=3, retries=0, retry_delay=0)
         assert stats.errors == 4 and stats.scraped == 2
+        assert stats.invalid == 1 and stats.rows_written == 6
 
     def test_no_checkpoint_past_failed_chunk(self, spark, tmp_store):
         """A tripped breaker must not checkpoint its own chunk — resume

@@ -1391,6 +1391,69 @@ class TestZoneFormatMeta:
         with _pytest.raises(ValueError, match="rebuild|Rebuild"):
             read_cms_cells(spark, base, width=1024, depth=2)
 
+    # (reader, the family's rebuild hint, where a batch lands under the
+    # zone dir, what the reader returns for an absent zone)
+    ZONE_READERS = [
+        ("read_bloom_words", "_BLOOM_REBUILD_HINT", "", None),
+        ("read_cms_cells", "_CMS_REBUILD_HINT", "", None),
+        ("read_gram_rows", "_GRAM_REBUILD_HINT", "", None),
+        ("read_kmv_hashes", "_KMV_REBUILD_HINT", "", None),
+        ("read_quantile_sample", "_QUANTILE_REBUILD_HINT", "", None),
+        ("read_ivf_index", "_IVF_REBUILD_HINT", "", (None, None)),
+        ("read_pq_codes", "_PQ_REBUILD_HINT", "", (None, None)),
+        ("read_kmeans_state", "_KMEANS_REBUILD_HINT", "", (None, None)),
+        ("read_word_freqs", "_WORD_FREQS_REBUILD_HINT", "", (None, None)),
+        ("read_dsir_model", "_DSIR_REBUILD_HINT", "", (None, None)),
+        ("read_cc_assignments", "_CC_REBUILD_HINT", "", (None, None)),
+        ("read_drop_list", "_DROP_LIST_REBUILD_HINT", "drops", (None, None)),
+        ("read_bm25_index", "_BM25_INDEX_REBUILD_HINT", "postings",
+         (None, None, None, None)),
+    ]
+
+    @pytest.mark.parametrize(
+        "reader, hint, sub, absent", ZONE_READERS,
+        ids=[r[0] for r in ZONE_READERS],
+    )
+    def test_reader_zone_contract(
+        self, spark, tmp_path, monkeypatch, reader, hint, sub, absent
+    ):
+        """Every stored-zone reader keeps the same marker contract and
+        reads the marker once per call: an absent zone is the reader's
+        None shape, data without a marker is refused as unversioned, and
+        another family's marker is refused with this family's rebuild
+        hint."""
+        import json
+        import re
+
+        from ctcityscraper_spark.streaming import events
+
+        reads = []
+        real_read = events.read_zone_meta
+
+        def counting_read(spark_, base):
+            reads.append(base)
+            return real_read(spark_, base)
+
+        monkeypatch.setattr(events, "read_zone_meta", counting_read)
+        read = getattr(events, reader)
+        base = tmp_path / "zone"
+
+        assert read(spark, str(base)) == absent
+        assert len(reads) == 1
+
+        spark.range(2).write.parquet(str(base / sub / "batch_id=0"))
+        with pytest.raises(ValueError, match="no _zone_meta.json") as err:
+            read(spark, str(base))
+        assert "unversioned" in str(err.value)
+        assert len(reads) == 2
+
+        (base / "_zone_meta.json").write_text(
+            json.dumps({"kind": "other_zone", "format_version": 1})
+        )
+        with pytest.raises(ValueError, match=re.escape(getattr(events, hint))):
+            read(spark, str(base))
+        assert len(reads) == 3
+
 
 class TestStreamingDriverState:
     @pytest.mark.parametrize(
